@@ -28,10 +28,18 @@ release beats relying on LRU.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 _OWNED: list[DataFrame] = []
+
+#: serializes :func:`flat_checkpoint`'s read-toggle-restore of the
+#: session-global constraint-propagation conf — two unguarded callers
+#: interleaving would each restore the other's ``false`` as the
+#: "previous" value and leave propagation off for the whole session
+_CONF_LOCK = threading.Lock()
 
 
 def owned_persist(
@@ -60,22 +68,24 @@ def flat_checkpoint(df: DataFrame) -> DataFrame:
     constraint DERIVATION for the plan being checkpointed (the
     resulting LogicalRDD carries no inferred constraints — same as any
     fresh scan); session-level optimization of every other plan is
-    untouched.
+    untouched. The toggle is held under a module-level lock, so
+    concurrent callers never observe (or restore) each other's value.
     """
     spark = df.sparkSession
     key = "spark.sql.constraintPropagation.enabled"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "false")
-    try:
-        return df.localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    with _CONF_LOCK:
+        try:
+            prev = spark.conf.get(key)
+        except Exception:
+            prev = None
+        spark.conf.set(key, "false")
+        try:
+            return df.localCheckpoint(eager=True)
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
 
 def release_owned_caches() -> int:

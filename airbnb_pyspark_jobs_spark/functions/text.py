@@ -118,12 +118,6 @@ def lang_guess(text: Column | str, langs: tuple[str, ...] = ("en", "de", "es", "
     return lang_guess_from_counts(counts)
 
 
-def punct_ratio(text: Column | str) -> Column:
-    text = F.col(text) if isinstance(text, str) else text
-    n_punct = F.regexp_count(text, F.lit(r"[^A-Za-z0-9\s]")).cast("double")
-    return n_punct / F.length(text).cast("double")
-
-
 def quality_score_from_counts(
     n_tokens: Column, sw_en: Column, n_punct: Column, n_chars: Column
 ) -> Column:

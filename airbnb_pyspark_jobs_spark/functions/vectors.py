@@ -5,9 +5,10 @@ accumulator, which matches an in-order SQL summation — the basis for the
 cross-engine-reproducible similarity oracles. Elements are cast to
 double FIRST so both engines accumulate in float64.
 
-Scale: these run inside whole-stage codegen per row; for very wide
-vectors (>4k dims) a vectorized Pandas UDF over Arrow batches becomes
-competitive — provided as ``cosine_pandas`` in operators/similarity.py.
+Scale: these are interpreted higher-order functions evaluated per row;
+bulk scoring (many vectors × many centroids/queries) runs instead in
+operators/similarity.py's Arrow vector-pass kernel, which reproduces
+this fold order bit for bit.
 """
 
 from __future__ import annotations

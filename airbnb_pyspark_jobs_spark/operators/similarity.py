@@ -20,9 +20,21 @@ computed in float64 in array order and rounded before ranking, with id
 tie-breaks, so top-k output is stable cross-engine (used by the DuckDB
 oracle).
 
-For very wide vectors a Pandas-UDF path (:func:`cosine_pandas_scores`)
-computes scores in NumPy over Arrow batches — same semantics, better
-constant factor; gated behind the same rounded output contract.
+Every vectorized pass in this module — scoring, assignment, Lloyd
+partials, hashing, PQ coding, rotation — runs through ONE Arrow kernel,
+:func:`_vector_pass` (the module's only ``mapInPandas``). Its
+bit-identity contract, stated here once: vectors are decoded to
+float64; every dot product, squared norm and squared-L2 distance is the
+j-order fold ``acc += a_j·b_j`` (:func:`_fold`), the identical IEEE op
+sequence as ``functions.vectors.dot`` and DuckDB's
+``list_dot_product``; unit normalization is ``v / sqrt(fold(v, v))``,
+the op sequence of :func:`unit_vectors`. Raw scores are therefore
+bit-identical to the JVM and oracle expressions. Rounding happens
+JVM-side (``F.round`` on a raw score) or, for an in-stage argmax, via
+:func:`_round_half_up_py` — the exact twin of Spark's ``Round`` —
+applied only to tie contenders (:func:`_best_cols`), so a fused
+assignment picks exactly the row ``row_number() over (partition by id
+order by round(sim, d) desc, cid asc) = 1`` picks.
 """
 
 from __future__ import annotations
@@ -33,7 +45,177 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from airbnb_pyspark_jobs_spark.functions.vectors import cosine, dot, norm, to_double_array
+from airbnb_pyspark_jobs_spark.functions.vectors import dot, norm, to_double_array
+
+
+# ---------------------------------------------------------------------------
+# The Arrow vector-pass kernel (contract: module docstring). One
+# ``mapInPandas`` owns the batch decode, the empty-batch skip, the
+# in-stage normalization, the j-order fold and the per-group (or
+# per-subspace) centroid-matrix dispatch; each caller supplies only a
+# ``task`` that turns scored parts into output rows.
+# ---------------------------------------------------------------------------
+def _fold(a, b):
+    """Σ_j a[..., j]·b[..., j] accumulated in j order, broadcasting over
+    the leading axes: ``_fold(v, v)`` is the squared norm per row,
+    ``_fold(a, b)`` the row-wise pair dot."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]), dtype=np.float64)
+    for j in range(a.shape[-1]):
+        acc += a[..., j] * b[..., j]
+    return acc
+
+
+def _unit_rows(v):
+    """Rows of an (n, d) matrix scaled to unit norm."""
+    import numpy as np
+
+    return v / np.sqrt(_fold(v, v))[:, None]
+
+
+def _scores(v, cmat):
+    """(n, k) dot of every row of ``v`` against every row of ``cmat``."""
+    return _fold(v[:, None, :], cmat[None, :, :])
+
+
+def _metric_scores(v, cmat, metric: str):
+    """Scores to MAXIMIZE: ``dot`` raw inner product, ``unit`` the
+    unit-dot (cosine) with the rows normalized in-stage, ``l2`` the
+    NEGATED squared L2 distance in dot-product form
+    ``(v·v − 2·v·c) + c·c``."""
+    if metric == "l2":
+        return -(
+            (_fold(v, v)[:, None] - 2.0 * _scores(v, cmat)) + _fold(cmat, cmat)[None, :]
+        )
+    return _scores(_unit_rows(v) if metric == "unit" else v, cmat)
+
+
+def _cents_matrix(cents):
+    """(ascending cid array, k×d float64 matrix) from a [(cid, vec)]
+    list — sorted so :func:`_best_cols`' cid tie-break is
+    order-independent."""
+    import numpy as np
+
+    pairs = sorted(cents)
+    cids = np.array([cid for cid, _ in pairs], dtype=np.int64)
+    cmat = np.array([v for _, v in pairs], dtype=np.float64)
+    return cids, cmat
+
+
+def _vector_pass(
+    frame: DataFrame,
+    schema: str,
+    task,
+    vecs: tuple[str, ...] = ("__av",),
+    mats=None,
+    metric: str = "dot",
+    group_col: str | None = None,
+    subspaces: bool = False,
+) -> DataFrame:
+    """Run ``task`` over ``frame``'s Arrow batches — the module's one
+    ``mapInPandas``. ``task`` receives the task's iterator of parts
+    ``(pdf, vs, acc, g, cids)`` and yields pandas frames matching
+    ``schema``; per-task state (Lloyd partials) is a local of ``task``.
+
+    Per non-empty batch the kernel decodes each column in ``vecs`` to an
+    (n, d) float64 matrix (``vs``) and, given ``mats``, scores ``vs[0]``
+    under ``metric`` into ``acc`` (n, k) against the ascending ``cids``:
+
+    - flat (default): ``mats = (cids, cmat)``, one part per batch — no
+      pandas ``groupby``;
+    - ``group_col``: ``mats = {g: (cids, cmat)}``, one part per group
+      present in the batch, each row scored only against its own
+      group's matrix (``g`` the int group key);
+    - ``subspaces``: ``mats = [(cids, cmat)] * m``, m parts per batch,
+      part ``g = s`` scoring slice s of every row (its width the
+      codebook's) — ``vs`` then holds that slice.
+
+    Without ``mats``, ``acc``/``cids`` are None and ``g`` the group."""
+    import numpy as np
+
+    def parts(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            if group_col is None:
+                splits = [(None, pdf)]
+            else:
+                splits = ((int(g), sub) for g, sub in pdf.groupby(group_col, sort=False))
+            for g, sub in splits:
+                vs = [
+                    np.stack(sub[c].to_numpy()).astype(np.float64, copy=False)
+                    for c in vecs
+                ]
+                if mats is None:
+                    yield sub, vs, None, g, None
+                elif subspaces:
+                    for s, (cids, cmat) in enumerate(mats):
+                        w = cmat.shape[1]
+                        sv = vs[0][:, s * w : (s + 1) * w]
+                        yield sub, [sv], _metric_scores(sv, cmat, metric), s, cids
+                else:
+                    cids, cmat = mats if g is None else mats[g]
+                    yield sub, vs, _metric_scores(vs[0], cmat, metric), g, cids
+
+    return frame.mapInPandas(lambda batches: task(parts(batches)), schema=schema)
+
+
+def _round_half_up_py(x: float, digits: int) -> float:
+    """Exact Python twin of Spark's ``Round(double, digits)``: Java
+    rounds ``BigDecimal.valueOf(x)`` — the SHORTEST round-trip decimal
+    repr of the double, not its full binary expansion — HALF_UP.
+    Python ``repr(float)`` is the same shortest round-trip decimal, and
+    ``Decimal.quantize(..., ROUND_HALF_UP)`` the same rounding rule, so
+    this matches the JVM bit-for-bit. (``Decimal(x)`` directly would be
+    WRONG: the full binary expansion of a double whose shortest repr
+    ends exactly on a 5 can sit below the .5 boundary.) Non-finite
+    values pass through, as in Spark. Called only on bounded tie
+    contenders — never per element of a full score matrix."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    if math.isnan(x) or math.isinf(x):
+        return x
+    return float(
+        Decimal(repr(x)).quantize(
+            Decimal(1).scaleb(-digits), rounding=ROUND_HALF_UP
+        )
+    )
+
+
+def _best_cols(acc, cids, digits: int):
+    """Per-row winning COLUMN of ``max(struct(round(sim, digits),
+    -cid))`` — highest rounded score, smallest-cid tie-break, NaN
+    greatest: the selection of ``row_number() over (partition by id
+    order by round(sim, digits) desc, cid asc) = 1``, in numpy.
+
+    Fast path: when exactly one raw score sits within ``2·10^-digits``
+    of the row max, it wins outright — rounding to the 10^-digits grid
+    is monotone and two values more than one grid step apart cannot
+    round equal, so no other score can round ≥ it. Slow path (rare):
+    the contenders are rounded exactly via :func:`_round_half_up_py`
+    and compared under (rounded desc, cid asc). Rows containing a NaN
+    score resolve to the smallest cid among the NaN entries (NaN sorts
+    greatest and all NaNs compare equal in Spark's ordering).
+
+    ``acc`` is (n, k) float64, ``cids`` (k,) int and ascending (the
+    kernel's matrices are). ``cids[win]`` is the winning cid and
+    ``acc[arange(n), win]`` its raw score."""
+    import numpy as np
+
+    delta = 2.0 * 10.0 ** -digits
+    # fast path, and the NaN rule: numpy's argmax is the FIRST NaN
+    win = np.argmax(acc, axis=1)
+    ok = np.nonzero(~np.isnan(acc).any(axis=1))[0]
+    a = acc[ok]
+    cont = a >= (a.max(axis=1)[:, None] - delta)
+    for r in np.nonzero(cont.sum(axis=1) > 1)[0]:
+        win[ok[r]] = max(
+            np.nonzero(cont[r])[0],
+            key=lambda c: (_round_half_up_py(float(a[r, c]), digits), -int(cids[c])),
+        )
+    return win
 
 
 def unit_vectors(
@@ -92,17 +274,10 @@ def _brute_scores(
     self-pairs dropped and a per-batch top-k prefilter.
 
     The query side (bounded — nq·d floats, like k-means training state)
-    is collected to the driver and closure-shipped into ONE Arrow/numpy
-    corpus pass; the interpreted ``F.aggregate(F.zip_with(...))`` fold
-    of the old crossJoin shape is gone (higher-order functions are not
-    codegen'd — guide §4.2; same move as :func:`centroid_unit_sims`,
-    measured ~20× there). Bit-exactness: products and the j-order
-    accumulation ``acc += v_j·q_j`` are the IDENTICAL IEEE op sequence
-    as ``functions.vectors.dot`` / DuckDB ``list_dot_product``; with
-    ``normalize`` the norms are the same j-order sum-of-squares fold +
-    IEEE sqrt + per-element divide as :func:`unit_vectors`. Rounding
-    and ranking stay JVM-side (``F.round`` + window), so numpy rounding
-    semantics never touch the values.
+    is collected to the driver and closure-shipped into ONE kernel pass
+    over the corpus (``normalize``: both sides unit-normalized, so the
+    score is the cosine). Rounding and ranking stay JVM-side
+    (``F.round`` + window).
 
     Prefilter safety: a batch row is dropped only when its raw score is
     below the batch's k-th largest (per query, self-pairs excluded) by
@@ -114,6 +289,7 @@ def _brute_scores(
     """
     import numpy as np
 
+    schema = "query_id long, neighbor_id long, __rsim double"
     q_rows = (
         queries.select(
             F.col(id_col).alias("query_id"), to_double_array(vec_col).alias("__qv")
@@ -127,32 +303,19 @@ def _brute_scores(
             "bounded query/anchor sets — use an ANN index for corpus-scale "
             "query sides"
         )
+    if not q_rows:
+        return corpus.sparkSession.createDataFrame([], schema)
     q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
     q_mat = np.array([list(r["__qv"]) for r in q_rows], dtype=np.float64)
-    if normalize and len(q_rows):
-        nrm2 = np.zeros(len(q_rows), dtype=np.float64)
-        for j in range(q_mat.shape[1]):  # j-order fold, same op sequence
-            nrm2 += q_mat[:, j] * q_mat[:, j]
-        q_mat = q_mat / np.sqrt(nrm2)[:, None]
-    m = len(q_ids)
+    if normalize:
+        q_mat = _unit_rows(q_mat)
     delta = 2.0 * 10.0**-round_digits
 
-    def score_batches(batches):
+    def task(parts):
         import pandas as pd
 
-        for pdf in batches:
+        for pdf, _vs, acc, _g, _c in parts:
             n = len(pdf)
-            if n == 0 or m == 0:
-                continue
-            v = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            if normalize:
-                nrm2 = np.zeros(n, dtype=np.float64)
-                for j in range(v.shape[1]):
-                    nrm2 += v[:, j] * v[:, j]
-                v = v / np.sqrt(nrm2)[:, None]
-            acc = np.zeros((n, m), dtype=np.float64)
-            for j in range(v.shape[1]):  # in-order fold, same op sequence
-                acc += v[:, j : j + 1] * q_mat[:, j][None, :]
             ids = pdf["id"].to_numpy()
             valid = ids[:, None] != q_ids[None, :]
             masked = np.where(valid, acc, -np.inf)
@@ -177,10 +340,12 @@ def _brute_scores(
                 }
             )
 
-    return corpus.select(
-        F.col(id_col).alias("id"), to_double_array(vec_col).alias("__v")
-    ).mapInPandas(
-        score_batches, schema="query_id long, neighbor_id long, __rsim double"
+    return _vector_pass(
+        corpus.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("__av")),
+        schema,
+        task,
+        mats=(q_ids, q_mat),
+        metric="unit" if normalize else "dot",
     )
 
 
@@ -191,44 +356,28 @@ def _pair_scores_arrow(
     b_col: str,
     cosine_mode: bool = False,
 ) -> DataFrame:
-    """RAW pair scores in ONE Arrow pass over a candidate-pair frame:
-    ``dot(a, b)`` with the j-order IEEE fold; ``cosine_mode``
-    additionally divides by ``norm(a)·norm(b)`` with each norm the
-    j-order sum-of-squares fold + IEEE sqrt, then the same
-    multiply-then-divide op sequence as ``functions.vectors.cosine`` —
-    bit-identical doubles either way. Replaces the interpreted
-    per-candidate higher-order-function folds on verification paths
-    (not codegen'd — guide §4.2; the measured ~20× of
-    :func:`centroid_unit_sims`). Key columns pass through; rounding
-    and thresholding stay JVM-side. Emits ``__rs`` double."""
+    """RAW pair scores in ONE kernel pass over a candidate-pair frame:
+    ``dot(a, b)``, or with ``cosine_mode`` ``dot(a, b) / (norm(a) ·
+    norm(b))`` — the op sequence of ``functions.vectors.cosine``. Key
+    columns pass through; rounding and thresholding stay JVM-side.
+    Emits ``__rs`` double."""
 
-    def score_batches(batches):
+    def task(parts):
         import numpy as np
         import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = np.stack(pdf[a_col].to_numpy()).astype(np.float64)
-            b = np.stack(pdf[b_col].to_numpy()).astype(np.float64)
-            d = np.zeros(len(a), dtype=np.float64)
-            for j in range(a.shape[1]):  # in-order fold (cross-engine)
-                d += a[:, j] * b[:, j]
+        for pdf, (a, b), _acc, _g, _c in parts:
+            d = _fold(a, b)
             if cosine_mode:
-                na = np.zeros(len(a), dtype=np.float64)
-                nb = np.zeros(len(a), dtype=np.float64)
-                for j in range(a.shape[1]):
-                    na += a[:, j] * a[:, j]
-                    nb += b[:, j] * b[:, j]
-                d = d / (np.sqrt(na) * np.sqrt(nb))
+                d = d / (np.sqrt(_fold(a, a)) * np.sqrt(_fold(b, b)))
             cols = {name: pdf[name].to_numpy() for name, _ in key_schema}
             cols["__rs"] = d
             yield pd.DataFrame(cols)
 
     schema = ", ".join(f"{n} {t}" for n, t in key_schema) + ", __rs double"
     keys = [n for n, _ in key_schema]
-    return pairs.select(*keys, a_col, b_col).mapInPandas(
-        score_batches, schema=schema
+    return _vector_pass(
+        pairs.select(*keys, a_col, b_col), schema, task, vecs=(a_col, b_col)
     )
 
 
@@ -244,11 +393,9 @@ def knn_bruteforce(
 
     Returns ``query_id, neighbor_id, cos_sim, rn``. Ranking is on the
     ROUNDED similarity with neighbor-id tie-break → deterministic.
-    The n×nq scoring runs in one Arrow/numpy corpus pass with j-order
-    accumulation (see :func:`_brute_scores` — bit-identical to the old
-    ``unit_vectors`` + crossJoin + ``dot`` fold, measured much faster:
-    higher-order functions are interpreted, not codegen'd); only the
-    per-batch top-k survivors reach the ranking shuffle.
+    The n×nq scoring runs in one kernel pass over the corpus
+    (:func:`_brute_scores`); only the per-batch top-k survivors reach
+    the ranking shuffle.
     """
     sims = _brute_scores(
         corpus, queries, k, id_col, vec_col, round_digits, normalize=True
@@ -723,9 +870,9 @@ def knn_dot_topk(
     maximum-inner-product ranking a dot-product index serves. Same
     shape and determinism discipline as :func:`knn_bruteforce`
     (broadcast queries, rounded score, id tie-break); returns
-    ``query_id, neighbor_id, dot_score, rn``. Scoring runs in the same
-    Arrow/numpy j-order pass as :func:`knn_bruteforce` (``normalize``
-    off — raw inner products)."""
+    ``query_id, neighbor_id, dot_score, rn``. Scoring is the
+    :func:`knn_bruteforce` kernel pass with ``normalize`` off (raw inner
+    products)."""
     sims = _brute_scores(
         corpus, queries, k, id_col, vec_col, round_digits, normalize=False
     ).select(
@@ -897,7 +1044,6 @@ def lsh_bucket_ann(
     cand = c.join(F.broadcast(q), on="__bucket").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    # Arrow-pass verification (identical IEEE cosine op sequence)
     sims = _pair_scores_arrow(
         cand,
         [("query_id", "long"), ("neighbor_id", "long")],
@@ -963,7 +1109,6 @@ def lsh_multiprobe_ann(
     cand = c.join(F.broadcast(probes), on="__bucket").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    # Arrow-pass verification (identical IEEE cosine op sequence)
     sims = _pair_scores_arrow(
         cand,
         [("query_id", "long"), ("neighbor_id", "long")],
@@ -994,303 +1139,238 @@ def _py_unit(vec: list[float]) -> list[float]:
     return [x / n for x in vec]
 
 
-def centroid_unit_sims(
-    units: DataFrame,
-    cents_unit: list[tuple[int, list[float]]],
-    id_alias: str = "id",
-) -> DataFrame:
-    """RAW (unrounded) unit-dot similarity of every (id, vn) row to
-    every unit centroid: ``(id, cid, __rsim)``, one row per pair —
-    the assignment inner loop of k-means/IVF, vectorized.
-
-    Runs as an Arrow-batched numpy stage with j-order accumulation
-    (``acc += fl(vn_j·cn_j)``) — the IDENTICAL IEEE op sequence as
-    ``functions.vectors.dot`` / DuckDB ``list_dot_product``, so the raw
-    doubles are bit-identical cross-engine (the cp_buckets argument,
-    plus exact-rounded multiplies which both engines also share).
-    Rounding and ranking stay OUTSIDE this stage (JVM ``F.round`` +
-    window), so no numpy rounding semantics ever touch the values.
-    Measured ~20× over the interpreted per-row fold at k=64 (the
-    higher-order-function loop is not codegen'd; SCALE_NOTES)."""
-    import numpy as np
-
-    cids = np.array([cid for cid, _ in cents_unit], dtype=np.int32)
-    cmat = np.array([v for _, v in cents_unit], dtype=np.float64)  # k × dims
-    k = len(cids)
-
-    def sim_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["vn"].to_numpy()).astype(np.float64)
-            acc = np.zeros((len(v), k), dtype=np.float64)
-            for j in range(v.shape[1]):  # in-order fold, same op sequence
-                acc += v[:, j : j + 1] * cmat[:, j][None, :]
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(pdf["id"].to_numpy(), k),
-                    "cid": np.tile(cids, len(v)),
-                    "__rsim": acc.ravel(),
-                }
-            )
-
-    out = units.select(F.col(id_alias).alias("id"), "vn").mapInPandas(
-        sim_batches, schema="id long, cid int, __rsim double"
-    )
-    return out.withColumnRenamed("id", id_alias)
+def _unit_cents(cents: list[tuple[int, list[float]]]) -> list[tuple[int, list[float]]]:
+    """[(cid, raw vec)] → [(cid, unit vec)] via :func:`_py_unit`."""
+    return [(cid, _py_unit(v)) for cid, v in cents]
 
 
-def nearest_centroid(
-    sims: DataFrame,
-    id_cols: list[str],
-    round_digits: int = 4,
-    out_col: str = "cid",
-    keep_sim: str | None = None,
-) -> DataFrame:
-    """Per-``id_cols`` argmax of the ROUNDED similarity with cid-asc
-    tie-break — the rank-1 selection of every k-means/IVF assignment
-    step, as a ``groupBy`` + struct-max instead of a row_number window.
-
-    Identical selection to ``row_number over (partition by id order by
-    round(__rsim) desc, cid asc) = 1``: Spark orders structs
-    field-by-field, so ``max(struct(round(__rsim), -cid))`` picks the
-    highest rounded sim and, on ties, the smallest cid; NaN sims sort
-    greatest in BOTH the window's descending order and the struct max.
-    Why: the aggregate partial-aggregates map-side — the k rows per id
-    emitted by one Arrow batch collapse to one row BEFORE the exchange
-    (guide §2.3), where the window shuffled and sorted all n·k rows.
-    ``keep_sim`` additionally returns the winning rounded sim under
-    that name."""
-    agg = sims.groupBy(*id_cols).agg(
-        F.max(
-            F.struct(
-                F.round("__rsim", round_digits).alias("s"),
-                (-F.col("cid")).cast("int").alias("nc"),
-            )
-        ).alias("__m")
-    )
-    cols = [*id_cols, (-F.col("__m.nc")).cast("int").alias(out_col)]
-    if keep_sim is not None:
-        cols.append(F.col("__m.s").alias(keep_sim))
-    return agg.select(*cols)
-
-
-def _round_half_up_py(x: float, digits: int) -> float:
-    """Exact Python twin of Spark's ``Round(double, digits)``: Java
-    rounds ``BigDecimal.valueOf(x)`` — the SHORTEST round-trip decimal
-    repr of the double, not its full binary expansion — HALF_UP.
-    Python ``repr(float)`` is the same shortest round-trip decimal, and
-    ``Decimal.quantize(..., ROUND_HALF_UP)`` the same rounding rule, so
-    this matches the JVM bit-for-bit. (``Decimal(x)`` directly would be
-    WRONG: the full binary expansion of a double whose shortest repr
-    ends exactly on a 5 can sit below the .5 boundary.) Non-finite
-    values pass through, as in Spark. Called only on bounded tie
-    contenders — never per element of a full score matrix."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    if math.isnan(x) or math.isinf(x):
-        return x
-    return float(
-        Decimal(repr(x)).quantize(
-            Decimal(1).scaleb(-digits), rounding=ROUND_HALF_UP
-        )
-    )
-
-
-def _best_cid_rows(acc, cids, digits: int):
-    """Per-row winner of ``max(struct(round(sim, digits), -cid))`` —
-    the EXACT :func:`nearest_centroid` selection (highest rounded sim,
-    smallest-cid tie-break, NaN greatest) computed in numpy, so the
-    assignment can stay inside the Arrow scoring stage instead of
-    paying a shuffle per training pass.
-
-    Fast path: when exactly one raw score sits within
-    ``2·10^-digits`` of the row max, it wins outright — rounding to
-    the 10^-digits grid is monotone and two values more than one grid
-    step apart cannot round equal (the :func:`_brute_scores` prefilter
-    argument), so no other score can round ≥ it. Slow path (rare): the
-    contenders are rounded exactly via :func:`_round_half_up_py` and
-    compared under (rounded desc, cid asc). Rows containing a NaN
-    score resolve to the smallest cid among the NaN entries (NaN sorts
-    greatest and all NaNs compare equal in Spark's ordering).
-
-    ``acc`` is (n, k) float64, ``cids`` (k,) int — MUST be ascending
-    (asserted at the call sites building the matrices). Returns (n,)
-    int array of winning cids."""
-    import numpy as np
-
-    n, k = acc.shape
-    delta = 2.0 * 10.0 ** -digits
-    out = np.empty(n, dtype=np.int64)
-    nanrows = np.isnan(acc).any(axis=1)
-    ok = ~nanrows
-    if ok.any():
-        a = acc[ok]
-        m = a.max(axis=1)
-        cont = a >= (m[:, None] - delta)
-        ncont = cont.sum(axis=1)
-        # fast path: unique contender == raw argmax
-        win = np.argmax(a, axis=1)
-        slow = np.nonzero(ncont > 1)[0]
-        for r in slow:
-            cand = np.nonzero(cont[r])[0]
-            best = None
-            for c in cand:
-                rs = _round_half_up_py(float(a[r, c]), digits)
-                key = (rs, -int(cids[c]))
-                if best is None or key > best[0]:
-                    best = (key, c)
-            win[r] = best[1]
-        out[ok] = cids[win]
-    if nanrows.any():
-        first_nan = np.argmax(np.isnan(acc[nanrows]), axis=1)
-        out[nanrows] = cids[first_nan]
+def _unit_subs(
+    subs: list[tuple[int, int, list[float]]],
+) -> dict[int, list[tuple[int, list[float]]]]:
+    """Two-level ``(super, sub, raw vec)`` list → ``{super: [(sub,
+    unit vec)]}``, the grouped centroid layout."""
+    out: dict[int, list[tuple[int, list[float]]]] = {}
+    for g, sc, v in subs:
+        out.setdefault(g, []).append((sc, _py_unit(v)))
     return out
 
 
-def _np_unit_rows(v):
-    """In-stage unit normalization of an (n, d) float64 matrix with the
-    engines' fold order: norm² accumulated j-first (the
-    :func:`_brute_scores` pattern, identical IEEE sequence to
-    ``unit_vectors``' ``sqrt(dot(v, v))`` + per-element divide)."""
-    import numpy as np
-
-    nrm2 = np.zeros(len(v), dtype=np.float64)
-    for j in range(v.shape[1]):
-        nrm2 += v[:, j] * v[:, j]
-    return v / np.sqrt(nrm2)[:, None]
+def _kernel_mats(cents, group_col: str | None):
+    """Kernel ``mats`` for a flat [(cid, vec)] list, or per group for a
+    ``{g: [(cid, vec)]}`` dict when ``group_col`` is set."""
+    if group_col is None:
+        return _cents_matrix(cents)
+    return {g: _cents_matrix(lst) for g, lst in cents.items()}
 
 
-def _np_scores(vn, cmat):
-    """(n, k) raw unit-dot scores with j-order accumulation — the
-    :func:`centroid_unit_sims` inner loop, shared."""
-    import numpy as np
-
-    acc = np.zeros((len(vn), cmat.shape[0]), dtype=np.float64)
-    for j in range(vn.shape[1]):
-        acc += vn[:, j : j + 1] * cmat[:, j][None, :]
-    return acc
+def _cell_frame(frame: DataFrame, id_col: str | None, vec_col: str, group_col: str | None):
+    """Kernel input: ``__id`` / ``__g`` / ``__av`` (float64 vector)."""
+    cols = [] if id_col is None else [F.col(id_col).alias("__id")]
+    if group_col is not None:
+        cols.append(F.col(group_col).alias("__g"))
+    return frame.select(*cols, to_double_array(vec_col).alias("__av"))
 
 
-def _cents_matrix(cents_unit):
-    """(ascending cid array, k×d float64 matrix) from a [(cid, unit
-    vec)] list — sorted so :func:`_best_cid_rows`' cid tie-break is
-    order-independent."""
-    import numpy as np
-
-    pairs = sorted(cents_unit)
-    cids = np.array([cid for cid, _ in pairs], dtype=np.int64)
-    cmat = np.array([v for _, v in pairs], dtype=np.float64)
-    return cids, cmat
-
-
-def assign_flat_arrow(
-    corpus: DataFrame,
-    centroids: list[tuple[int, list[float]]],
+def _centroid_sims(
+    frame: DataFrame,
     id_col: str,
     vec_col: str,
-    id_alias: str,
-    round_digits: int = 4,
-    out_col: str = "cid",
-    keep_vec: str | None = None,
+    cents,
+    group_col: str | None = None,
 ) -> DataFrame:
-    """Nearest-centroid assignment in ONE Arrow pass over the raw
-    corpus: in-stage unit normalization + j-order scoring (bit-identical
-    doubles — see :func:`_np_unit_rows`/:func:`_np_scores`) + the exact
-    rounded argmax (:func:`_best_cid_rows`). Replaces the
-    ``unit_vectors → centroid_unit_sims → nearest_centroid →
-    join(corpus)`` chain — zero exchanges and zero joins where the old
-    shape shuffled the n·k score rows AND re-shuffled the full vector
-    corpus through the join (guide §2.3/§2.4). ``keep_vec`` passes the
-    raw double vector through under that name (the list-build shape:
-    the inverted list needs the vector anyway, and map-local Arrow
-    passthrough beats a corpus-wide join)."""
-    cids, cmat = _cents_matrix([(cid, _py_unit(v)) for cid, v in centroids])
+    """RAW (unrounded) cosine of every row's vector to every unit
+    centroid — ``(id_col, [group_col], cid, __rsim)``, one row per
+    pair. Flat: ``cents`` is ``[(cid, unit vec)]``; with ``group_col``
+    it is ``{g: [(cid, unit vec)]}`` and each row is scored only
+    against its own group's centroids (the two-level quantizer, where
+    per-row work is |own group's centroids|, not |all centroids|).
+    Rows are normalized in-stage; rounding and ranking stay JVM-side.
+    Measured ~20× over the interpreted per-row fold at k=64
+    (SCALE_NOTES)."""
 
-    def assign_batches(batches):
+    def task(parts):
         import numpy as np
         import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["__av"].to_numpy()).astype(np.float64)
-            best = _best_cid_rows(_np_scores(_np_unit_rows(v), cmat), cids, round_digits)
-            cols = {"id": pdf["id"].to_numpy(), "cid": best.astype(np.int32)}
-            if keep_vec is not None:
-                cols["__kv"] = pdf["__av"]
+        for pdf, _vs, acc, g, cids in parts:
+            n, k = acc.shape
+            cols = {"__id": np.repeat(pdf["__id"].to_numpy(), k)}
+            if group_col is not None:
+                cols["__g"] = np.full(n * k, g, dtype=np.int32)
+            cols["cid"] = np.tile(cids.astype(np.int32), n)
+            cols["__rsim"] = acc.ravel()
             yield pd.DataFrame(cols)
 
-    schema = "id long, cid int" + (", __kv array<double>" if keep_vec else "")
-    out = corpus.select(
-        F.col(id_col).alias("id"), to_double_array(vec_col).alias("__av")
-    ).mapInPandas(assign_batches, schema=schema)
-    renames = {"id": id_alias, "cid": out_col}
-    if keep_vec is not None:
-        renames["__kv"] = keep_vec
+    grp = "" if group_col is None else "__g int, "
+    out = _vector_pass(
+        _cell_frame(frame, id_col, vec_col, group_col),
+        f"__id long, {grp}cid int, __rsim double",
+        task,
+        mats=_kernel_mats(cents, group_col),
+        metric="unit",
+        group_col=None if group_col is None else "__g",
+    )
+    renames = {"__id": id_col}
+    if group_col is not None:
+        renames["__g"] = group_col
     return out.withColumnsRenamed(renames)
 
 
-def _mean_partials_flat(
-    corpus: DataFrame,
-    cents_unit: list[tuple[int, list[float]]],
+def _probes(
+    frame: DataFrame,
+    id_col: str,
     vec_col: str,
+    cents,
+    n: int,
     round_digits: int,
+    group_col: str | None = None,
 ) -> DataFrame:
-    """Per-TASK Lloyd-update partials ``(cid, d, s, c)`` fused into the
-    assignment pass: each task assigns its rows (exact rounded argmax)
-    and accumulates per-(cid, dim) raw-coordinate sums row-by-row
-    (``np.add.at`` — in-order, unbuffered), emitting k·d partial rows
-    per task. This is the SAME two-level structure as the JVM plan it
-    replaces (HashAggregate partial avg per task, one merge after the
-    exchange): per-task row-order accumulation, partials merged once —
-    but the exchange now carries k·d rows per task instead of the n·k
-    score rows plus a full re-shuffle of the vector corpus through the
-    means join. Downstream: ``groupBy(cid, d).agg(round(sum(s)/sum(c),
-    mean_digits))`` — the identical final divide-and-round as
-    ``round(avg(x), mean_digits)``. Only the vector column enters the
-    stage (guide §4.1)."""
-    cids, cmat = _cents_matrix(cents_unit)
+    """The ``n`` nearest cells per row (per ``(row, group)`` with
+    ``group_col``) by rounded cosine, cid tie-break:
+    ``(id_col, [group_col], cid)``. ``cents`` as in
+    :func:`_centroid_sims`."""
+    sims = _centroid_sims(frame, id_col, vec_col, cents, group_col)
+    parts = [id_col] if group_col is None else [id_col, group_col]
+    w = Window.partitionBy(*parts).orderBy(
+        F.round("__rsim", round_digits).desc(), F.col("cid").asc()
+    )
+    return (
+        sims.withColumn("__crn", F.row_number().over(w))
+        .filter(F.col("__crn") <= n)
+        .select(*parts, "cid")
+    )
 
-    def part_batches(batches):
+
+def _assign(
+    frame: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cents,
+    round_digits: int,
+    group_col: str | None = None,
+    out_col: str = "cid",
+    keep_vec: str | None = None,
+    keep_sim: str | None = None,
+) -> DataFrame:
+    """Fused nearest-centroid assignment in ONE kernel pass: in-stage
+    normalization + scoring + the exact rounded argmax
+    (:func:`_best_cols`). ``cents`` as in :func:`_centroid_sims` — flat,
+    or per ``group_col`` (the two-level sub-assignment). Returns
+    ``id_col, [group_col], out_col``; ``keep_vec`` passes the raw
+    float64 vector through under that name (the inverted list needs it
+    anyway — map-local passthrough beats a corpus-wide join) and
+    ``keep_sim`` adds the winner's RAW score (callers round it with
+    ``F.round``). No exchange: the n·k scores never leave the task."""
+
+    def task(parts):
         import numpy as np
         import pandas as pd
 
-        sums = None
-        counts = np.zeros(len(cids), dtype=np.int64)
-        idx_of = {int(c): i for i, c in enumerate(cids)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["__av"].to_numpy()).astype(np.float64)
-            if sums is None:
-                sums = np.zeros((len(cids), v.shape[1]), dtype=np.float64)
-            best = _best_cid_rows(
-                _np_scores(_np_unit_rows(v), cmat), cids, round_digits
-            )
-            rows = np.fromiter(
-                (idx_of[int(b)] for b in best), dtype=np.int64, count=len(best)
-            )
-            np.add.at(sums, rows, v)  # row-order, unbuffered adds
-            np.add.at(counts, rows, 1)
-        if sums is None or not counts.any():
-            return
-        nz = np.nonzero(counts)[0]
-        d = sums.shape[1]
-        yield pd.DataFrame(
-            {
-                "cid": np.repeat(cids[nz].astype(np.int32), d),
-                "d": np.tile(np.arange(d, dtype=np.int32), len(nz)),
-                "s": sums[nz].ravel(),
-                "c": np.repeat(counts[nz], d),
-            }
-        )
+        for pdf, _vs, acc, g, cids in parts:
+            win = _best_cols(acc, cids, round_digits)
+            cols = {"__id": pdf["__id"].to_numpy()}
+            if group_col is not None:
+                cols["__g"] = np.full(len(win), g, dtype=np.int32)
+            cols["__c"] = cids[win].astype(np.int32)
+            if keep_vec is not None:
+                cols["__kv"] = pdf["__av"].to_numpy()
+            if keep_sim is not None:
+                cols["__ks"] = acc[np.arange(len(win)), win]
+            yield pd.DataFrame(cols)
 
-    return corpus.select(to_double_array(vec_col).alias("__av")).mapInPandas(
-        part_batches, schema="cid int, d int, s double, c long"
+    schema = "__id long" + ("" if group_col is None else ", __g int") + ", __c int"
+    renames = {"__id": id_col, "__c": out_col}
+    if group_col is not None:
+        renames["__g"] = group_col
+    if keep_vec is not None:
+        schema += ", __kv array<double>"
+        renames["__kv"] = keep_vec
+    if keep_sim is not None:
+        schema += ", __ks double"
+        renames["__ks"] = keep_sim
+    out = _vector_pass(
+        _cell_frame(frame, id_col, vec_col, group_col),
+        schema,
+        task,
+        mats=_kernel_mats(cents, group_col),
+        metric="unit",
+        group_col=None if group_col is None else "__g",
+    )
+    return out.withColumnsRenamed(renames)
+
+
+def _lloyd_partials(
+    frame: DataFrame,
+    vec_col: str,
+    cents,
+    round_digits: int,
+    group_col: str | None = None,
+    subspaces: bool = False,
+) -> DataFrame:
+    """Per-TASK Lloyd-update partials ``(g, cid, d, s, c)`` fused into
+    the assignment pass: each task assigns its rows (exact rounded
+    argmax) and accumulates per-(g, cid, dim) raw-coordinate sums
+    row-by-row (``np.add.at`` — in-order, unbuffered), emitting one
+    row per (g, cid, dim) it saw. Three layouts, one accumulator:
+
+    - flat (``g = 0``): ``cents`` = ``[(cid, unit vec)]``, rounded
+      cosine argmax — :func:`kmeans_centroids`;
+    - ``group_col``: ``cents`` = ``{g: [(cid, unit vec)]}``, each row
+      competing only among its group's centroids — the two-level
+      sub-quantizer;
+    - ``subspaces``: ``cents`` = m raw PQ codebooks; ``g = s`` is the
+      subspace, assignment minimizes the rounded squared L2 (the argmax
+      of its negation: HALF_UP is symmetric, so ``round(-x) =
+      -round(x)``) and the sums are over subvectors.
+
+    This is the SAME two-level structure as a JVM HashAggregate (partial
+    per task in row order, merged once after the exchange), but the
+    exchange carries partial rows per task instead of n·k score rows
+    plus a full re-shuffle of the corpus through a means join.
+    Downstream ``round(sum(s) / sum(c), digits)`` is the identical final
+    divide-and-round as ``round(avg(x), digits)``."""
+
+    def task(parts):
+        import numpy as np
+        import pandas as pd
+
+        totals: dict = {}  # g -> (cids, per-cid sums, per-cid counts)
+        for _pdf, (v,), acc, g, cids in parts:
+            win = _best_cols(acc, cids, round_digits)
+            if g not in totals:
+                totals[g] = (
+                    cids,
+                    np.zeros((len(cids), v.shape[1]), dtype=np.float64),
+                    np.zeros(len(cids), dtype=np.int64),
+                )
+            _c, sums, counts = totals[g]
+            np.add.at(sums, win, v)  # row-order, unbuffered adds
+            np.add.at(counts, win, 1)
+        for g, (cids, sums, counts) in totals.items():
+            nz = np.nonzero(counts)[0]
+            d = sums.shape[1]
+            yield pd.DataFrame(
+                {
+                    "g": np.full(len(nz) * d, g or 0, dtype=np.int32),
+                    "cid": np.repeat(cids[nz].astype(np.int32), d),
+                    "d": np.tile(np.arange(d, dtype=np.int32), len(nz)),
+                    "s": sums[nz].ravel(),
+                    "c": np.repeat(counts[nz], d),
+                }
+            )
+
+    if subspaces:
+        mats = [_cents_matrix(book) for book in cents]
+    else:
+        mats = _kernel_mats(cents, group_col)
+    return _vector_pass(
+        _cell_frame(frame, None, vec_col, group_col),
+        "g int, cid int, d int, s double, c long",
+        task,
+        mats=mats,
+        metric="l2" if subspaces else "unit",
+        group_col=None if group_col is None else "__g",
+        subspaces=subspaces,
     )
 
 
@@ -1310,16 +1390,17 @@ def kmeans_centroids(
     Init = the ``k`` lowest-id vectors (cid 0..k-1 in id order). Each
     iteration assigns every vector to its nearest centroid by the
     ROUNDED unit-vector dot (cid tie-break) — cosine computed as
-    ``dot(v/|v|, c/|c|)`` with corpus units normalized in-engine and
+    ``dot(v/|v|, c/|c|)`` with corpus units normalized in-stage and
     centroid units normalized driver-side with the same fold order —
     and recomputes per-dimension means rounded to ``mean_digits``.
     Rounding makes the float averages identical across engines, so the
     same iterations unrolled in SQL produce bit-identical centroids
     (the q53 oracle does exactly that, with a ``list_transform(cenv,
     x -> x/sqrt(list_dot_product(cenv, cenv)))`` centroid-unit CTE).
-    Empty clusters drop out. The n×k similarity inner loop runs in the
-    :func:`centroid_unit_sims` Arrow stage (bit-identical raw doubles;
-    rounding/ranking JVM-side).
+    Empty clusters drop out. Each iteration is one fused kernel pass
+    (:func:`_lloyd_partials`): only the per-task partial rows reach the
+    final aggregation — no n·k score shuffle, no rank-1 exchange, no
+    corpus-wide means join.
 
     This is a TRAINING action: ``iters`` small Spark jobs with
     driver-side collects of k×dims floats each (bounded, not per-row).
@@ -1339,17 +1420,9 @@ def kmeans_centroids(
         (i, [float(x) for x in r.v]) for i, r in enumerate(init)
     ]
     for _ in range(iters):
-        # one fused Arrow pass: assign (exact rounded argmax) +
-        # per-task (cid, d) partial sums — the n·k score shuffle, the
-        # rank-1 exchange and the full-corpus means join are all gone
-        # (guide §2.3/§2.4); only k·d partial rows per task reach the
-        # final aggregation, whose divide-and-round is identical to the
-        # old round(avg(x), mean_digits)
-        parts = _mean_partials_flat(
-            e, [(cid, _py_unit(v)) for cid, v in cents], "v", round_digits
-        )
         means = (
-            parts.groupBy("cid", "d")
+            _lloyd_partials(e, "v", _unit_cents(cents), round_digits)
+            .groupBy("cid", "d")
             .agg(F.round(F.sum("s") / F.sum("c"), mean_digits).alias("cx"))
         ).collect()
         by_cid: dict[int, dict[int, float]] = {}
@@ -1371,19 +1444,16 @@ def ivf_corpus_lists(
 ) -> DataFrame:
     """Build the IVF inverted lists once: every corpus vector assigned
     to its single nearest TRAINED centroid (the q53 tie-break
-    discipline). Returns ``neighbor_id, cid, __cv``. Callers sweeping
-    a search knob (q202's n_probe levels) persist THIS frame and pass
-    it to :func:`ivf_ann` via ``corpus_lists`` — one corpus scan
-    instead of one per sweep point."""
-    # one fused Arrow pass: normalize + score + exact rounded argmax,
-    # raw vector passed through — the n·k score exchange AND the
-    # corpus-wide join that re-attached __cv are both gone (guide §2.4)
-    return assign_flat_arrow(
-        corpus,
-        centroids,
-        id_col,
-        vec_col,
+    discipline) in one fused kernel pass, raw vector passed through.
+    Returns ``neighbor_id, cid, __cv``. Callers sweeping a search knob
+    (q202's n_probe levels) persist THIS frame and pass it to
+    :func:`ivf_ann` via ``corpus_lists`` — one corpus scan instead of
+    one per sweep point."""
+    return _assign(
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
         "neighbor_id",
+        vec_col,
+        _unit_cents(centroids),
         round_digits,
         keep_vec="__cv",
     )
@@ -1413,16 +1483,16 @@ def ivf_split_hot_cells(
     tie-break), seed B the member with the lowest rounded unit-dot to
     seed A — so when the cell is hot because a dense bundle crowded
     into it (the drift scenario), the two seeds straddle bundle vs
-    background instead of both landing in the bundle. One assignment
-    pass (rounded unit-dot, seed-index tie-break — the q53 discipline)
-    splits the members, and the rounded per-dimension means become the
-    sub-centroids. A side that captures no members drops out (the
-    empty-cluster rule), leaving the cell unsplit-but-recentered.
-    Untouched cells keep their centroid AND cid; sub-centroids take
-    ids ``k + 2·r + side`` for the r-th hot cell in cid order — pure
-    functions of (data, centroids), so an oracle replays the whole
-    split relationally (q344), the q92 trained-once recipe with the
-    training INSIDE both engines.
+    background instead of both landing in the bundle. One fused
+    assignment pass (rounded unit-dot, seed-index tie-break — the q53
+    discipline) splits the members, and the rounded per-dimension
+    means become the sub-centroids. A side that captures no members
+    drops out (the empty-cluster rule), leaving the cell
+    unsplit-but-recentered. Untouched cells keep their centroid AND
+    cid; sub-centroids take ids ``k + 2·r + side`` for the r-th hot
+    cell in cid order — pure functions of (data, centroids), so an
+    oracle replays the whole split relationally (q344), the q92
+    trained-once recipe with the training INSIDE both engines.
 
     Like :func:`kmeans_centroids` this is a TRAINING action: one
     bounded collect of cell sizes (k rows), one of the seed vectors
@@ -1449,43 +1519,43 @@ def ivf_split_hot_cells(
     )
     if not hot:
         return list(centroids)
-    u = unit_vectors(corpus, id_col, vec_col, "neighbor_id", "vn")
     cents_by_id = dict(centroids)
     out: list[tuple[int, list[float]]] = [
         (cid, vec) for cid, vec in centroids if cid not in hot
     ]
 
-    def _farthest_from(members_u: DataFrame, ref_unit: list[float]):
-        """(id, unit vector) of the member with the LOWEST rounded
-        unit-dot to ``ref_unit`` (id tie-break) — seed id + vector in
-        ONE driver job (the id-then-fetch split cost a second full
-        member scan per seed)."""
-        sims = centroid_unit_sims(members_u, [(0, ref_unit)], id_alias="neighbor_id")
+    def _farthest_from(members: DataFrame, ref_unit: list[float]) -> list[float]:
+        """Unit vector of the member with the LOWEST rounded unit-dot
+        to ``ref_unit`` (id tie-break) — one driver job."""
+        sims = _centroid_sims(members, "neighbor_id", "__cv", [(0, ref_unit)])
         row = (
-            sims.join(members_u, "neighbor_id")
+            sims.join(members, "neighbor_id")
             .orderBy(
                 F.round("__rsim", round_digits).asc(), F.col("neighbor_id").asc()
             )
-            .select("neighbor_id", "vn")
+            .select("__cv")
             .limit(1)
             .collect()[0]
         )
-        return row.neighbor_id, [float(x) for x in row.vn]
+        return _py_unit([float(x) for x in row["__cv"]])
 
     for r, cid in enumerate(hot):
         members = lists.filter(F.col("cid") == cid).select("neighbor_id", "__cv")
-        mu = u.join(members.select("neighbor_id"), "neighbor_id", "left_semi")
-        mu = mu.localCheckpoint()  # 3 consumers: 2 seed scans + assignment
-        _id_a, unit_a = _farthest_from(mu, _py_unit(cents_by_id[cid]))
-        _id_b, unit_b = _farthest_from(mu, unit_a)
-        seed_units = [(0, unit_a), (1, unit_b)]
-        sims = centroid_unit_sims(mu, seed_units, id_alias="neighbor_id")
-        side = nearest_centroid(
-            sims, ["neighbor_id"], round_digits, out_col="__side"
+        # 3 consumers: 2 seed scans + the side assignment
+        members = members.localCheckpoint()
+        unit_a = _farthest_from(members, _py_unit(cents_by_id[cid]))
+        unit_b = _farthest_from(members, unit_a)
+        side = _assign(
+            members,
+            "neighbor_id",
+            "__cv",
+            [(0, unit_a), (1, unit_b)],
+            round_digits,
+            out_col="__side",
+            keep_vec="__cv",
         )
         means = (
-            side.join(members, "neighbor_id")
-            .select("__side", F.posexplode("__cv").alias("d", "x"))
+            side.select("__side", F.posexplode("__cv").alias("d", "x"))
             .groupBy("__side", "d")
             .agg(F.round(F.avg("x"), mean_digits).alias("cx"))
         ).collect()
@@ -1498,188 +1568,6 @@ def ivf_split_hot_cells(
                 (k_trained + 2 * r + sidx, [dims[i] for i in range(len(dims))])
             )
     return sorted(out)
-
-
-def grouped_centroid_unit_sims(
-    units: DataFrame,
-    group_col: str,
-    cents_by_group: dict[int, list[tuple[int, list[float]]]],
-    id_alias: str = "id",
-) -> DataFrame:
-    """:func:`centroid_unit_sims` restricted per group: each ``(id,
-    vn)`` row is scored ONLY against its own group's centroid matrix
-    (broadcast dict ``group → [(cid, unit_vec)]``) — the assignment
-    inner loop of the two-level quantizer, where a vector competes
-    only among its super-cell's sub-centroids. Same j-order IEEE fold
-    as the flat stage (bit-identical doubles cross-engine); per-row
-    work is |own group's centroids|, not |all centroids| — the whole
-    point of the hierarchy. Returns ``(id, group, cid, __rsim)``."""
-    import numpy as np
-
-    mats = {
-        g: (
-            np.array([cid for cid, _ in lst], dtype=np.int32),
-            np.array([v for _, v in lst], dtype=np.float64),
-        )
-        for g, lst in cents_by_group.items()
-    }
-
-    def sim_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, grps, cids_out, sims = [], [], [], []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                cids, cmat = mats[int(g)]
-                v = np.stack(sub["vn"].to_numpy()).astype(np.float64)
-                acc = np.zeros((len(v), len(cids)), dtype=np.float64)
-                for j in range(v.shape[1]):  # in-order fold (cross-engine)
-                    acc += v[:, j : j + 1] * cmat[:, j][None, :]
-                ids.append(np.repeat(sub["id"].to_numpy(), len(cids)))
-                grps.append(np.repeat(int(g), len(sub) * len(cids)))
-                cids_out.append(np.tile(cids, len(v)))
-                sims.append(acc.ravel())
-            yield pd.DataFrame(
-                {
-                    "id": np.concatenate(ids),
-                    "grp": np.concatenate(grps),
-                    "cid": np.concatenate(cids_out),
-                    "__rsim": np.concatenate(sims),
-                }
-            )
-
-    out = units.select(
-        F.col(id_alias).alias("id"), F.col(group_col).alias(group_col), "vn"
-    ).mapInPandas(sim_batches, schema="id long, grp int, cid int, __rsim double")
-    return out.withColumnsRenamed({"id": id_alias, "grp": group_col})
-
-
-def _grouped_mats(cents_by_group):
-    """group → (ascending cid array, matrix) for the grouped stages."""
-    return {g: _cents_matrix(lst) for g, lst in cents_by_group.items()}
-
-
-def grouped_assign_arrow(
-    frame: DataFrame,
-    group_col: str,
-    cents_by_group: dict[int, list[tuple[int, list[float]]]],
-    id_alias: str,
-    vec_col: str,
-    round_digits: int = 4,
-    out_col: str = "cid",
-    keep_vec: str | None = None,
-) -> DataFrame:
-    """:func:`assign_flat_arrow` restricted per group (the two-level
-    sub-assignment): each raw-vector row is normalized in-stage and
-    argmax'd ONLY against its own group's centroid matrix — one Arrow
-    pass, no score exchange, no join. ``cents_by_group`` values are
-    (cid, UNIT vec) lists, as in :func:`grouped_centroid_unit_sims`."""
-    mats = _grouped_mats(cents_by_group)
-
-    def assign_batches(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            outs = []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                cids, cmat = mats[int(g)]
-                v = np.stack(sub["__av"].to_numpy()).astype(np.float64)
-                best = _best_cid_rows(
-                    _np_scores(_np_unit_rows(v), cmat), cids, round_digits
-                )
-                cols = {
-                    "id": sub["id"].to_numpy(),
-                    "grp": np.repeat(np.int32(g), len(sub)),
-                    "cid": best.astype(np.int32),
-                }
-                if keep_vec is not None:
-                    cols["__kv"] = sub["__av"]
-                outs.append(pd.DataFrame(cols))
-            yield pd.concat(outs, ignore_index=True)
-
-    schema = "id long, grp int, cid int" + (
-        ", __kv array<double>" if keep_vec else ""
-    )
-    out = frame.select(
-        F.col(id_alias).alias("id"),
-        F.col(group_col),
-        to_double_array(vec_col).alias("__av"),
-    ).mapInPandas(assign_batches, schema=schema)
-    renames = {"id": id_alias, "grp": group_col, "cid": out_col}
-    if keep_vec is not None:
-        renames["__kv"] = keep_vec
-    return out.withColumnsRenamed(renames)
-
-
-def _grouped_mean_partials(
-    frame: DataFrame,
-    group_col: str,
-    cents_by_group: dict[int, list[tuple[int, list[float]]]],
-    vec_col: str,
-    round_digits: int,
-) -> DataFrame:
-    """Grouped twin of :func:`_mean_partials_flat` for the two-level
-    Lloyd loop: per-task partials ``(grp, cid, d, s, c)`` accumulated
-    row-by-row (``np.add.at``) across the task's batches — the
-    sub-means aggregation sees |groups|·k_sub·d rows per task instead
-    of the n·k_sub score rows plus the full-corpus means join."""
-    mats = _grouped_mats(cents_by_group)
-
-    def part_batches(batches):
-        import numpy as np
-        import pandas as pd
-
-        acc: dict[int, tuple] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for g, sub in pdf.groupby(group_col, sort=False):
-                g = int(g)
-                cids, cmat = mats[g]
-                v = np.stack(sub["__av"].to_numpy()).astype(np.float64)
-                if g not in acc:
-                    acc[g] = (
-                        np.zeros((len(cids), v.shape[1]), dtype=np.float64),
-                        np.zeros(len(cids), dtype=np.int64),
-                        {int(c): i for i, c in enumerate(cids)},
-                    )
-                sums, counts, idx_of = acc[g]
-                best = _best_cid_rows(
-                    _np_scores(_np_unit_rows(v), cmat), cids, round_digits
-                )
-                rows = np.fromiter(
-                    (idx_of[int(b)] for b in best),
-                    dtype=np.int64,
-                    count=len(best),
-                )
-                np.add.at(sums, rows, v)
-                np.add.at(counts, rows, 1)
-        for g in sorted(acc):
-            sums, counts, _ = acc[g]
-            cids, _cm = mats[g]
-            nz = np.nonzero(counts)[0]
-            if not len(nz):
-                continue
-            d = sums.shape[1]
-            yield pd.DataFrame(
-                {
-                    "grp": np.repeat(np.int32(g), len(nz) * d),
-                    "cid": np.repeat(cids[nz].astype(np.int32), d),
-                    "d": np.tile(np.arange(d, dtype=np.int32), len(nz)),
-                    "s": sums[nz].ravel(),
-                    "c": np.repeat(counts[nz], d),
-                }
-            )
-
-    out = frame.select(
-        F.col(group_col), to_double_array(vec_col).alias("__av")
-    ).mapInPandas(part_batches, schema="grp int, cid int, d int, s double, c long")
-    return out.withColumnRenamed("grp", group_col)
 
 
 def kmeans_centroids_two_level(
@@ -1702,9 +1590,9 @@ def kmeans_centroids_two_level(
     Training is the same deterministic Lloyd discipline as
     :func:`kmeans_centroids`, applied twice: supers trained flat, the
     corpus assigned once, then EVERY super's k_sub sub-centroids
-    trained together in one grouped Arrow pass per iteration
-    (:func:`grouped_centroid_unit_sims` — a vector competes only
-    among its own super's subs). Sub init = the k_sub lowest-id
+    trained together in one grouped kernel pass per iteration
+    (:func:`_lloyd_partials` with a group column — a vector competes
+    only among its own super's subs). Sub init = the k_sub lowest-id
     members of each super (the flat init convention, per group);
     rounded unit-dot assignment with sub-id tie-break; per-dimension
     means rounded to ``mean_digits``; empty subs drop out. Every
@@ -1725,15 +1613,12 @@ def kmeans_centroids_two_level(
         mean_digits=mean_digits,
     )
     # one fused pass assigns every vector to its super AND carries the
-    # raw vector — the flat score exchange, the rank-1 exchange and the
-    # two corpus joins (members build + init's raw-vector re-attach)
-    # are gone (guide §2.4)
-    members = assign_flat_arrow(
-        corpus,
-        supers,
-        id_col,
-        vec_col,
+    # raw vector
+    members = _assign(
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col)),
         "id",
+        vec_col,
+        _unit_cents(supers),
         round_digits,
         out_col="__scid",
         keep_vec="v",
@@ -1753,22 +1638,15 @@ def kmeans_centroids_two_level(
     for g in subs:
         subs[g].sort()
     for _ in range(iters):
-        subs_u = {
-            g: [(sc, _py_unit(v)) for sc, v in lst] for g, lst in subs.items()
-        }
-        # fused grouped pass: sub-assign + per-task (scid, sub, d)
-        # partials; divide-and-round identical to round(avg, digits)
-        parts = _grouped_mean_partials(
-            members, "__scid", subs_u, "v", round_digits
-        )
+        subs_u = {g: _unit_cents(lst) for g, lst in subs.items()}
         means = (
-            parts.withColumnRenamed("cid", "__sub")
-            .groupBy("__scid", "__sub", "d")
+            _lloyd_partials(members, "v", subs_u, round_digits, group_col="__scid")
+            .groupBy("g", "cid", "d")
             .agg(F.round(F.sum("s") / F.sum("c"), mean_digits).alias("cx"))
         ).collect()
         nxt: dict[int, dict[int, dict[int, float]]] = {}
         for r in means:
-            nxt.setdefault(r["__scid"], {}).setdefault(r["__sub"], {})[r.d] = r.cx
+            nxt.setdefault(r.g, {}).setdefault(r.cid, {})[r.d] = r.cx
         subs = {
             g: [
                 (sc, [dims[i] for i in range(len(dims))])
@@ -1793,31 +1671,25 @@ def ivf_two_level_lists(
     """Two-level inverted lists: each vector assigned to its nearest
     super (flat argmax over k_super), then to its nearest sub WITHIN
     that super (grouped argmax over k_sub) — O(n·(k_super + k_sub))
-    total, never n × all-cells. Returns ``neighbor_id, scid, sub,
+    total, never n × all-cells. Two chained fused passes, the raw
+    vector passed through both. Returns ``neighbor_id, scid, sub,
     __cv``."""
-    subs_u: dict[int, list[tuple[int, list[float]]]] = {}
-    for g, sc, v in subs:
-        subs_u.setdefault(g, []).append((sc, _py_unit(v)))
-    # two chained Arrow passes (super argmax with vector passthrough,
-    # then grouped sub argmax) — the old shape's two score exchanges,
-    # two rank-1 exchanges and two corpus joins are all gone
-    s_asg = assign_flat_arrow(
-        corpus,
-        supers,
-        id_col,
-        vec_col,
+    s_asg = _assign(
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
         "neighbor_id",
+        vec_col,
+        _unit_cents(supers),
         round_digits,
         out_col="scid",
         keep_vec="__cv",
     )
-    return grouped_assign_arrow(
+    return _assign(
         s_asg,
-        "scid",
-        subs_u,
         "neighbor_id",
         "__cv",
+        _unit_subs(subs),
         round_digits,
+        group_col="scid",
         out_col="sub",
         keep_vec="__cv",
     ).select("neighbor_id", "scid", "sub", "__cv")
@@ -1850,101 +1722,78 @@ def ivf_two_level_lists_spill(
     O(n·√k) build the hierarchy exists for, never n × all-cells.
     Returns ``neighbor_id, scid, sub, is_spill, __cv`` (one row per
     assignment; spilled vectors carry 2 rows)."""
-    supers_u = [(cid, _py_unit(v)) for cid, v in supers]
-    subs_u: dict[int, list[tuple[int, list[float]]]] = {}
-    for g, sc, v in subs:
-        subs_u.setdefault(g, []).append((sc, _py_unit(v)))
-    scids, smat = _cents_matrix(supers_u)
-    sub_mats = _grouped_mats(subs_u)
+    import numpy as np
+
+    scids, smat = _cents_matrix(_unit_cents(supers))
+    sub_mats = _kernel_mats(_unit_subs(subs), "scid")
     scale = float(10**round_digits)
     delta = 2.0 * 10.0 ** -round_digits
 
-    # one fused Arrow pass replaces: flat score exchange + top-2 window
-    # + max-units window + corpus re-join + grouped score exchange +
-    # rank-1 window + two reassembly joins. The rounded top-2 and the
-    # integer-unit margin replicate the old JVM expressions exactly:
-    # ranking compares round(sim, digits) (desc, cid asc) via
-    # _round_half_up_py on the raw-max contenders (the _best_cid_rows
+    # one fused kernel pass: super top-2, spill margin, sub argmax. The
+    # rounded top-2 and the integer-unit margin replicate the oracle's
+    # expressions exactly: ranking compares round(sim, digits) (desc, cid asc) via
+    # _round_half_up_py on the raw-max contenders (the _best_cols
     # margin argument extended to rank 2), and the margin compares
     # round(sim·10^digits) BIGINTs with best = max over the two kept
-    # rows (the same guard the window version carried for the
-    # round-then-scale vs scale-then-round boundary case). NaN scores
-    # cannot spill (the old path's NaN units cast would not produce a
-    # comparable integer either); assignment falls back to the
-    # smallest-cid NaN rule shared with _best_cid_rows.
-    def spill_batches(batches):
-        import numpy as np
+    # rows (the guard for the round-then-scale vs scale-then-round
+    # boundary case). NaN scores cannot spill (a NaN units cast yields
+    # no comparable integer); assignment falls back to the
+    # smallest-cid NaN rule shared with _best_cols.
+    def units(x: float) -> int:
+        return int(_round_half_up_py(x * scale, 0))
+
+    def picks(a) -> list[tuple[int, bool]]:
+        """[(super column, is_spill)] for one row's super scores."""
+        if np.isnan(a).any() or len(a) < 2:
+            return [(int(np.argmax(a)), False)]  # argmax: first NaN
+        r2 = np.partition(a, len(a) - 2)[len(a) - 2]
+        top = sorted(
+            np.nonzero(a >= r2 - delta)[0],
+            key=lambda c: (-_round_half_up_py(float(a[c]), round_digits), int(scids[c])),
+        )[:2]
+        out = [(int(top[0]), False)]
+        if len(top) > 1:
+            u1, u2 = units(float(a[top[0]])), units(float(a[top[1]]))
+            if max(u1, u2) - u2 <= spill_margin_units:
+                out.append((int(top[1]), True))
+        return out
+
+    def task(parts):
         import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["__av"].to_numpy()).astype(np.float64)
-            vn = _np_unit_rows(v)
-            acc = _np_scores(vn, smat)
-            ids = pdf["id"].to_numpy()
-            out_id, out_scid, out_spill, out_vec = [], [], [], []
+        for pdf, (v,), _acc, _g, _c in parts:
+            vn = _unit_rows(v)
+            acc = _scores(vn, smat)
+            rows, cols, spill = [], [], []
             for r in range(len(v)):
-                a = acc[r]
-                if np.isnan(a).any():
-                    c = int(scids[int(np.argmax(np.isnan(a)))])
-                    picks = [(c, False)]
-                elif len(a) < 2:
-                    picks = [(int(scids[0]), False)]
-                else:
-                    r2 = np.partition(a, len(a) - 2)[len(a) - 2]
-                    cand = np.nonzero(a >= r2 - delta)[0]
-                    ranked = sorted(
-                        (
-                            (-_round_half_up_py(float(a[c]), round_digits), int(scids[c]))
-                            for c in cand
-                        ),
-                    )[:2]
-                    u1 = int(
-                        _round_half_up_py(float(a[np.nonzero(scids == ranked[0][1])[0][0]]) * scale, 0)
-                    )
-                    picks = [(ranked[0][1], False)]
-                    if len(ranked) > 1:
-                        u2 = int(
-                            _round_half_up_py(float(a[np.nonzero(scids == ranked[1][1])[0][0]]) * scale, 0)
-                        )
-                        if max(u1, u2) - u2 <= spill_margin_units:
-                            picks.append((ranked[1][1], True))
-                for scid, is_spill in picks:
-                    out_id.append(int(ids[r]))
-                    out_scid.append(scid)
-                    out_spill.append(is_spill)
-                    out_vec.append(r)
-            if not out_id:
-                continue
+                for c, is_spill in picks(acc[r]):
+                    rows.append(r)
+                    cols.append(c)
+                    spill.append(is_spill)
+            row_arr = np.array(rows, dtype=np.int64)
+            scid_arr = scids[np.array(cols, dtype=np.int64)]
             # grouped sub argmax over the (row, scid) assignments
-            scid_arr = np.array(out_scid, dtype=np.int64)
-            row_arr = np.array(out_vec, dtype=np.int64)
-            sub_out = np.empty(len(out_id), dtype=np.int64)
+            sub_out = np.empty(len(rows), dtype=np.int64)
             for g in np.unique(scid_arr):
                 sel = np.nonzero(scid_arr == g)[0]
                 cids_g, cmat_g = sub_mats[int(g)]
-                sub_out[sel] = _best_cid_rows(
-                    _np_scores(vn[row_arr[sel]], cmat_g), cids_g, round_digits
-                )
+                sub_out[sel] = cids_g[
+                    _best_cols(_scores(vn[row_arr[sel]], cmat_g), cids_g, round_digits)
+                ]
             yield pd.DataFrame(
                 {
-                    "id": np.array(out_id, dtype=np.int64),
+                    "neighbor_id": pdf["__id"].to_numpy()[row_arr],
                     "scid": scid_arr.astype(np.int32),
                     "sub": sub_out.astype(np.int32),
-                    "is_spill": np.array(out_spill, dtype=bool),
-                    "__kv": pdf["__av"].to_numpy()[row_arr],
+                    "is_spill": np.array(spill, dtype=bool),
+                    "__cv": pdf["__av"].to_numpy()[row_arr],
                 }
             )
 
-    out = corpus.select(
-        F.col(id_col).alias("id"), to_double_array(vec_col).alias("__av")
-    ).mapInPandas(
-        spill_batches,
-        schema="id long, scid int, sub int, is_spill boolean, __kv array<double>",
-    )
-    return out.withColumnsRenamed({"id": "neighbor_id", "__kv": "__cv"}).select(
-        "neighbor_id", "scid", "sub", "is_spill", "__cv"
+    return _vector_pass(
+        _cell_frame(corpus, id_col, vec_col, None),
+        "neighbor_id long, scid int, sub int, is_spill boolean, __cv array<double>",
+        task,
     )
 
 
@@ -1959,34 +1808,24 @@ def ivf_two_level_query_probes(
     round_digits: int = 4,
 ) -> DataFrame:
     """The query-side probe routing of :func:`ivf_two_level_ann`:
-    ``(query_id, scid, sub)`` — top ``n_probe_super`` supers per
-    query (flat argmax), then top ``n_probe_sub`` subs within each
-    probed super (grouped argmax). Exposed for candidate-count audits
-    (the q344/q345 latency column)."""
-    supers_u = [(cid, _py_unit(v)) for cid, v in supers]
-    subs_u: dict[int, list[tuple[int, list[float]]]] = {}
-    for g, sc, v in subs:
-        subs_u.setdefault(g, []).append((sc, _py_unit(v)))
-    qu = unit_vectors(queries, id_col, vec_col, "query_id", "vn")
-    ssims = centroid_unit_sims(qu, supers_u, id_alias="query_id")
-    ws = Window.partitionBy("query_id").orderBy(
-        F.round("__rsim", round_digits).desc(), F.col("cid").asc()
-    )
-    s_probe = (
-        ssims.withColumn("__rn", F.row_number().over(ws))
-        .filter(F.col("__rn") <= n_probe_super)
-        .select("query_id", F.col("cid").alias("scid"))
-    )
-    pu = s_probe.join(qu, "query_id")
-    bsims = grouped_centroid_unit_sims(pu, "scid", subs_u, id_alias="query_id")
-    wb = Window.partitionBy("query_id", "scid").orderBy(
-        F.round("__rsim", round_digits).desc(), F.col("cid").asc()
-    )
-    return (
-        bsims.withColumn("__rn", F.row_number().over(wb))
-        .filter(F.col("__rn") <= n_probe_sub)
-        .select("query_id", "scid", F.col("cid").alias("sub"))
-    )
+    ``(query_id, scid, sub)`` — top ``n_probe_super`` supers per query
+    (:func:`ivf_query_probes`), then top ``n_probe_sub`` subs within
+    each probed super (the same probe selection, grouped by super).
+    Exposed for candidate-count audits (the q344/q345 latency
+    column)."""
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
+    s_probe = ivf_query_probes(
+        queries, supers, n_probe_super, id_col, vec_col, round_digits
+    ).select("query_id", F.col("cid").alias("scid"))
+    return _probes(
+        s_probe.join(q, "query_id"),
+        "query_id",
+        "__qv",
+        _unit_subs(subs),
+        n_probe_sub,
+        round_digits,
+        group_col="scid",
+    ).select("query_id", "scid", F.col("cid").alias("sub"))
 
 
 def ivf_two_level_ann(
@@ -2019,10 +1858,6 @@ def ivf_two_level_ann(
     q = queries.select(
         F.col(id_col).alias("query_id"), to_double_array(vec_col).alias("__qv")
     )
-    supers_u = [(cid, _py_unit(v)) for cid, v in supers]
-    subs_u: dict[int, list[tuple[int, list[float]]]] = {}
-    for g, sc, v in subs:
-        subs_u.setdefault(g, []).append((sc, _py_unit(v)))
     lists = (
         corpus_lists
         if corpus_lists is not None
@@ -2041,9 +1876,6 @@ def ivf_two_level_ann(
     cand = lists.join(F.broadcast(probes), on=["scid", "sub"]).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    # candidate verification as one Arrow pass (identical IEEE cosine
-    # op sequence — see _pair_scores_arrow) instead of the interpreted
-    # three-fold HOF cosine per candidate row
     sims = _pair_scores_arrow(
         cand,
         [("query_id", "long"), ("neighbor_id", "long")],
@@ -2077,20 +1909,18 @@ def ivf_query_probes(
     round_digits: int = 4,
 ) -> DataFrame:
     """The query-side probe assignment of :func:`ivf_ann`, exposed on
-    its own: ``(query_id, cid)`` — one row per probed cell. Audits use
+    its own: ``(query_id, cid)`` — one row per probed cell (the
+    ``n_probe`` nearest by rounded cosine, cid tie-break). Audits use
     it to count the candidates a probe budget actually scans (q344's
     before/after latency column: join against the inverted lists and
     count), which ``ivf_ann`` itself never materializes."""
-    cents_u = [(cid, _py_unit(vec)) for cid, vec in centroids]
-    qu = unit_vectors(queries, id_col, vec_col, "query_id", "vn")
-    sims = centroid_unit_sims(qu, cents_u, id_alias="query_id")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("__rsim", round_digits).desc(), F.col("cid").asc()
-    )
-    return (
-        sims.withColumn("__crn", F.row_number().over(w))
-        .filter(F.col("__crn") <= n_probe)
-        .select("query_id", "cid")
+    return _probes(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
+        "query_id",
+        vec_col,
+        _unit_cents(centroids),
+        n_probe,
+        round_digits,
     )
 
 
@@ -2111,11 +1941,11 @@ def ivf_ann(
 
     Centroids come from :func:`kmeans_centroids` (deterministic Lloyd on
     the corpus) unless pre-trained ones are passed via ``centroids`` —
-    e.g. MLlib k-means|| output at cluster scale. They are inlined as
-    literals and broadcast, so the corpus-side assignment is a
-    scan-side projection + partitioned argmin window; queries probe
-    their ``n_probe`` nearest lists; similarity is computed only against
-    those lists' members.
+    e.g. MLlib k-means|| output at cluster scale. The corpus side is
+    one fused assignment pass (:func:`ivf_corpus_lists`, or the
+    prebuilt ``corpus_lists``); queries probe their ``n_probe``
+    nearest lists (:func:`ivf_query_probes`); similarity is computed
+    only against those lists' members.
 
     Scale: the search join is an equi-join on list id — candidates
     shrink ~n_probe/n_centroids. Recall vs :func:`knn_bruteforce` is
@@ -2123,9 +1953,6 @@ def ivf_ann(
     25/30 with the untrained first-k stand-in this replaced; converged
     by iteration 2 on this corpus).
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), to_double_array(vec_col).alias("__cv")
-    )
     q = queries.select(
         F.col(id_col).alias("query_id"), to_double_array(vec_col).alias("__qv")
     )
@@ -2138,35 +1965,16 @@ def ivf_ann(
             vec_col=vec_col,
             round_digits=round_digits,
         )
-    cents_u = [(cid, _py_unit(vec)) for cid, vec in centroids]
-    cu = unit_vectors(corpus, id_col, vec_col, "neighbor_id", "vn")
-    qu = unit_vectors(queries, id_col, vec_col, "query_id", "vn")
-
-    def assign(units: DataFrame, idcol: str, keep_n: int) -> DataFrame:
-        sims = centroid_unit_sims(units, cents_u, id_alias=idcol)
-        w = Window.partitionBy(idcol).orderBy(
-            F.round("__rsim", round_digits).desc(), F.col("cid").asc()
-        )
-        return (
-            sims.withColumn("__crn", F.row_number().over(w))
-            .filter(F.col("__crn") <= keep_n)
-            .select(idcol, "cid")
-        )
-
     if corpus_lists is None:
-        c_assigned = assign(cu, "neighbor_id", 1).join(c, "neighbor_id")
-    else:
-        c_assigned = corpus_lists  # prebuilt by ivf_corpus_lists (same centroids!)
-    q_probes = assign(qu, "query_id", n_probe).join(q, "query_id")
-
-    cand = c_assigned.join(F.broadcast(q_probes), on="cid").filter(
+        corpus_lists = ivf_corpus_lists(corpus, centroids, id_col, vec_col, round_digits)
+    q_probes = ivf_query_probes(
+        queries, centroids, n_probe, id_col, vec_col, round_digits
+    ).join(q, "query_id")
+    cand = corpus_lists.join(F.broadcast(q_probes), on="cid").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
     # no dedup needed: each corpus vector lives in exactly ONE list,
-    # so a (query, neighbor) pair can arise from at most one probe.
-    # Verification runs as one Arrow pass (identical IEEE cosine op
-    # sequence — _pair_scores_arrow) instead of the interpreted
-    # three-fold HOF cosine per candidate row (guide §4.2).
+    # so a (query, neighbor) pair can arise from at most one probe
     sims = _pair_scores_arrow(
         cand,
         [("query_id", "long"), ("neighbor_id", "long")],
@@ -2230,9 +2038,7 @@ def cosine_dup_pairs(
             F.col("b.v").alias("__vb"),
         )
     )
-    # n²/2 exact verifications in one Arrow pass (same j-order dot
-    # fold — _pair_scores_arrow) instead of an interpreted HOF fold
-    # per pair (guide §4.2)
+    # n²/2 exact verifications in one kernel pass
     return (
         _pair_scores_arrow(
             paired, [("vec_id_a", "long"), ("vec_id_b", "long")], "__va", "__vb"
@@ -2354,25 +2160,17 @@ def lsh_candidate_pairs(
 
     Banding runs on the RAW vectors (sign(dot) is scale-invariant, but
     keeping the bucket expression byte-identical to the oracle avoids
-    fold-order sign flips near zero).
-
-    The T·b plane-dots per row run in ONE Arrow/numpy stage with
-    j-order accumulation (the :func:`cp_buckets` recipe — the old
-    per-row ``_bucket_expr`` chain was T·b interpreted higher-order
-    folds, guide §4.2), and the banded frame is PERSISTED: it feeds
+    fold-order sign flips near zero). The T·b plane-dots per row run in
+    ONE kernel pass (±1 products are exact, so the signs match the
+    oracle's ``list_dot_product`` bit for bit; ``d > 0`` + bit-weights
+    are integer-exact), and the banded frame is PERSISTED: it feeds
     both sides of the bucket self-join, which would otherwise duplicate
-    the whole banding subtree in the physical plan. Bit-exactness:
-    ±1 products are exact, the j-order additions are the identical IEEE
-    sequence as ``functions.vectors.dot``, and ``d > 0`` + bit-weights
-    are integer-exact.
+    the whole banding subtree in the physical plan.
     """
     import numpy as np
 
     from airbnb_pyspark_jobs_spark.caching import owned_persist
 
-    e = corpus.select(
-        F.col(id_col).alias("id"), to_double_array(vec_col).alias("v")
-    )
     g = np.array(
         [
             hyperplane(t * planes_per_table + j, dims)
@@ -2384,28 +2182,27 @@ def lsh_candidate_pairs(
     n_t, b = num_tables, planes_per_table
     bit_w = (2 ** np.arange(b, dtype=np.int64))[None, None, :]
 
-    def band_batches(batches):
+    def task(parts):
         import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            acc = np.zeros((len(v), g.shape[0]), dtype=np.float64)
-            for j in range(v.shape[1]):  # in-order fold: exact ±1 products
-                acc += v[:, j : j + 1] * g[:, j][None, :]
-            bits = (acc > 0).reshape(len(v), n_t, b)
-            bkt = (bits * bit_w).sum(axis=2).astype(np.int64)
+        for pdf, _vs, acc, _g, _c in parts:
+            n = len(pdf)
+            bkt = ((acc > 0).reshape(n, n_t, b) * bit_w).sum(axis=2).astype(np.int64)
             yield pd.DataFrame(
                 {
-                    "id": np.repeat(pdf["id"].to_numpy(), n_t),
-                    "t": np.tile(np.arange(n_t, dtype=np.int32), len(v)),
+                    "id": np.repeat(pdf["__id"].to_numpy(), n_t),
+                    "t": np.tile(np.arange(n_t, dtype=np.int32), n),
                     "bkt": bkt.ravel(),
                 }
             )
 
     banded = owned_persist(
-        e.mapInPandas(band_batches, schema="id long, t int, bkt long")
+        _vector_pass(
+            _cell_frame(corpus, id_col, vec_col, None),
+            "id long, t int, bkt long",
+            task,
+            mats=(None, g),
+        )
     )
 
     return (
@@ -2485,8 +2282,7 @@ def cosine_dup_pairs_lsh(
     ).join(
         u.select(F.col("id").alias("vec_id_b"), F.col("vn").alias("__vb")), "vec_id_b"
     )
-    # exact verification as one Arrow pass (same j-order dot fold —
-    # _pair_scores_arrow) instead of an interpreted HOF fold per pair
+    # exact verification as one kernel pass
     return (
         _pair_scores_arrow(
             paired, [("vec_id_a", "long"), ("vec_id_b", "long")], "__va", "__vb"
@@ -2549,25 +2345,19 @@ def cp_buckets(
     independent CP hashes: bucket = 2·argmax_i |y_i| + (y_argmax > 0)
     with y = G_h · unit(v). Returns ``(id, h, bkt)`` long layout.
 
-    The projections run in a vectorized Arrow-batched pandas stage
-    (mapInPandas): n_hashes·dims_per_hash in-order ±-accumulations per
-    vector — a numpy loop over dims, vectorized across (rows ×
-    projections). BIT-IDENTICAL to the engines' fold semantics: the
-    projection entries are ±1, so each product is EXACT and the j-order
-    accumulation performs the identical IEEE addition sequence as
-    ``functions.vectors.dot`` / DuckDB's ``list_dot_product`` (verified:
-    0 mismatches over 3000 buckets cross-engine). No rounding needed —
-    unlike computed-mean paths (q92), there is no engine-specific float
-    divergence to round away. Argmax ties break to the FIRST index in
-    numpy, Spark ``array_position`` and DuckDB ``list_position`` alike.
+    The projections run in ONE kernel pass: n_hashes·dims_per_hash
+    j-order ±-accumulations per unit vector. The projection entries are
+    ±1, so each product is EXACT and the fold matches the oracle's
+    ``list_dot_product`` bit for bit (verified: 0 mismatches over 3000
+    buckets cross-engine) — no rounding needed. Argmax ties break to
+    the FIRST index in numpy, Spark ``array_position`` and DuckDB
+    ``list_position`` alike.
 
     Scale: one scan, no shuffle in this stage; the (id, h, bkt) long
     layout is n·n_hashes rows of three ints — the banding exchange."""
     import numpy as np
 
-    u = unit_vectors(corpus, id_col, vec_col, "id", "vn")
-    # ±1 matrix built once driver-side (n_hashes·dims_per_hash × dims
-    # int8 ≈ tiny), closure-shipped to executors.
+    # ±1 matrix built once driver-side, closure-shipped to executors
     g = np.array(
         [
             cp_plane_signs(h, i, dims)
@@ -2578,30 +2368,29 @@ def cp_buckets(
     )  # (n_hashes*dims_per_hash, dims)
     n_h, d_p = n_hashes, dims_per_hash
 
-    def hash_batches(batches):
+    def task(parts):
         import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["vn"].to_numpy()).astype(np.float64)
-            acc = np.zeros((len(v), g.shape[0]), dtype=np.float64)
-            for j in range(v.shape[1]):  # in-order fold: exact ±1 products
-                acc += v[:, j : j + 1] * g[:, j][None, :]
-            y = acc.reshape(len(v), n_h, d_p)
+        for pdf, _vs, acc, _g, _c in parts:
+            n = len(pdf)
+            y = acc.reshape(n, n_h, d_p)
             a = np.argmax(np.abs(y), axis=2)  # first occurrence on ties
-            rows = np.arange(len(v))[:, None]
-            sign = y[rows, np.arange(n_h)[None, :], a] > 0
-            bkt = (a * 2 + sign).astype(np.int32)
+            sign = y[np.arange(n)[:, None], np.arange(n_h)[None, :], a] > 0
             yield pd.DataFrame(
                 {
-                    "id": np.repeat(pdf["id"].to_numpy(), n_h),
-                    "h": np.tile(np.arange(n_h, dtype=np.int32), len(v)),
-                    "bkt": bkt.ravel(),
+                    "id": np.repeat(pdf["__id"].to_numpy(), n_h),
+                    "h": np.tile(np.arange(n_h, dtype=np.int32), n),
+                    "bkt": (a * 2 + sign).astype(np.int32).ravel(),
                 }
             )
 
-    return u.mapInPandas(hash_batches, schema="id long, h int, bkt int")
+    return _vector_pass(
+        _cell_frame(corpus, id_col, vec_col, None),
+        "id long, h int, bkt int",
+        task,
+        mats=(None, g),
+        metric="unit",
+    )
 
 
 def cp_candidate_pairs(
@@ -2686,7 +2475,7 @@ def cp_tensored_dup_pairs(
         u.select(F.col("id").alias("vec_id_b"), F.col("vn").alias("__vb")),
         "vec_id_b",
     )
-    # exact verification as one Arrow pass (same j-order dot fold)
+    # exact verification as one kernel pass
     return (
         _pair_scores_arrow(
             paired, [("vec_id_a", "long"), ("vec_id_b", "long")], "__va", "__vb"
@@ -2737,18 +2526,19 @@ def ivf_blocked_dup_pairs(
         )
     from airbnb_pyspark_jobs_spark.caching import owned_persist
 
-    u = unit_vectors(corpus, id_col, vec_col, "id", "vn")
-    sims = centroid_unit_sims(u, [(cid, _py_unit(v)) for cid, v in centroids])
-    w = Window.partitionBy("id").orderBy(
-        F.round("__rsim", round_digits).desc(), F.col("cid").asc()
-    )
     # both sides of the cell self-join read this — persist so the
-    # Arrow centroid-sim pass runs once, not per join side
+    # kernel's centroid-sim pass runs once, not per join side
     assigned = owned_persist(
-        sims.withColumn("__crn", F.row_number().over(w))
-        .filter(F.col("__crn") <= n_assign)
-        .select("id", "cid")
+        _probes(
+            corpus.select(F.col(id_col).alias("id"), F.col(vec_col)),
+            "id",
+            vec_col,
+            _unit_cents(centroids),
+            n_assign,
+            round_digits,
+        )
     )
+    u = unit_vectors(corpus, id_col, vec_col, "id", "vn")
     cand = (
         assigned.alias("a")
         .join(
@@ -2768,7 +2558,7 @@ def ivf_blocked_dup_pairs(
         u.select(F.col("id").alias("vec_id_b"), F.col("vn").alias("__vb")),
         "vec_id_b",
     )
-    # exact verification as one Arrow pass (same j-order dot fold)
+    # exact verification as one kernel pass
     return (
         _pair_scores_arrow(
             paired, [("vec_id_a", "long"), ("vec_id_b", "long")], "__va", "__vb"
@@ -2780,46 +2570,6 @@ def ivf_blocked_dup_pairs(
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-
-
-def cosine_pandas_scores(
-    corpus: DataFrame,
-    queries_pd,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    """Vectorized (NumPy over Arrow batches) cosine scores of every corpus
-    row against a driver-provided query matrix — the wide-vector fast
-    path. ``queries_pd`` is a pandas DataFrame with ``vec_id`` and
-    ``embedding`` (list) columns; it is closure-broadcast to executors.
-
-    Returns ``query_id, neighbor_id, cos_sim`` (unranked)."""
-    import numpy as np
-    import pandas as pd
-
-    q_ids = queries_pd[id_col].to_numpy()
-    q_mat = np.stack(queries_pd[vec_col].to_numpy()).astype("float64")
-    q_norm = np.linalg.norm(q_mat, axis=1)
-
-    out_schema = "query_id long, neighbor_id long, cos_sim double"
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            norms = np.linalg.norm(mat, axis=1)
-            sims = (mat @ q_mat.T) / np.outer(norms, q_norm)
-            n, m = sims.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, n),
-                    "neighbor_id": np.tile(ids, m),
-                    "cos_sim": np.round(sims.T.ravel(), round_digits),
-                }
-            )
-
-    return corpus.select(id_col, vec_col).mapInPandas(score, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2837,83 +2587,6 @@ def _py_sq_norm(vec: list[float]) -> float:
     for x in vec:
         acc += x * x
     return acc
-
-
-def _pq_mean_partials(
-    corpus: DataFrame,
-    cents: list[list[tuple[int, list[float]]]],
-    m: int,
-    sub: int,
-    vec_col: str,
-    dist_digits: int,
-) -> DataFrame:
-    """Per-TASK Lloyd partials for ALL ``m`` PQ subspaces in ONE Arrow
-    pass: ``(s, cid, d, s_sum, c)``. Each task slices every vector into
-    its m subvectors, computes the rounded squared-L2 argmin per
-    subspace (``v·v − 2·v·c + c·c`` with the identical IEEE op order as
-    the JVM expression; argmin = :func:`_best_cid_rows` on the negated
-    distances — HALF_UP is symmetric, so ``round(-x) = -round(x)`` and
-    the (rounded asc, cid asc) min is exactly the (rounded desc, cid
-    asc) max of the negation) and accumulates per-(s, cid, dim)
-    subvector sums row-by-row. Replaces the n·m explode + broadcast
-    join evaluating an interpreted dot per (row, centroid) + two
-    groupBy exchanges per iteration (guide §2.3/§4.2)."""
-    mats = []
-    for s in range(m):
-        cids, cmat = _cents_matrix(cents[s])
-        mats.append((cids, cmat))
-
-    def part_batches(batches):
-        import numpy as np
-        import pandas as pd
-
-        sums = [None] * m
-        counts = [None] * m
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["__av"].to_numpy()).astype(np.float64)
-            for s in range(m):
-                cids, cmat = mats[s]
-                sv = v[:, s * sub : (s + 1) * sub]
-                vv = np.zeros(len(sv), dtype=np.float64)
-                c2 = np.zeros(len(cids), dtype=np.float64)
-                acc = np.zeros((len(sv), len(cids)), dtype=np.float64)
-                for j in range(sub):  # in-order folds (cross-engine)
-                    vv += sv[:, j] * sv[:, j]
-                    c2 += cmat[:, j] * cmat[:, j]
-                    acc += sv[:, j : j + 1] * cmat[:, j][None, :]
-                d2 = (vv[:, None] - 2.0 * acc) + c2[None, :]
-                best = _best_cid_rows(-d2, cids, dist_digits)
-                if sums[s] is None:
-                    sums[s] = np.zeros((len(cids), sub), dtype=np.float64)
-                    counts[s] = np.zeros(len(cids), dtype=np.int64)
-                idx_of = {int(c): i for i, c in enumerate(cids)}
-                rows = np.fromiter(
-                    (idx_of[int(b)] for b in best),
-                    dtype=np.int64,
-                    count=len(best),
-                )
-                np.add.at(sums[s], rows, sv)
-                np.add.at(counts[s], rows, 1)
-        for s in range(m):
-            if counts[s] is None or not counts[s].any():
-                continue
-            cids, _cm = mats[s]
-            nz = np.nonzero(counts[s])[0]
-            yield pd.DataFrame(
-                {
-                    "s": np.repeat(np.int32(s), len(nz) * sub),
-                    "cid": np.repeat(cids[nz].astype(np.int32), sub),
-                    "d": np.tile(np.arange(sub, dtype=np.int32), len(nz)),
-                    "sm": sums[s][nz].ravel(),
-                    "c": np.repeat(counts[s][nz], sub),
-                }
-            )
-
-    return corpus.select(to_double_array(vec_col).alias("__av")).mapInPandas(
-        part_batches, schema="s int, cid int, d int, sm double, c long"
-    )
 
 
 def pq_train_codebooks(
@@ -2936,24 +2609,16 @@ def pq_train_codebooks(
     iterations reproducible verbatim in SQL (the q83 oracle unrolls
     them).
 
-    One pass per iteration over ALL subspaces (VERDICT r6 #2): each
-    vector explodes into m (s, subvector) rows ONCE (persisted), the
-    current centroids travel as a BROADCAST DataFrame equi-joined on
-    ``s`` (a BroadcastHashJoin — codebook size never touches the plan,
-    where the previous per-subspace literal-centroid plans cost m×iters
-    separate jobs and k·m·d literals), and one grouped aggregate per
-    iteration collects k·m tiny centroid rows. Training actions: 1 init
-    + iters jobs total. At 100 TB train on an id-bounded sample, like
-    :func:`kmeans_centroids`.
+    One fused kernel pass per iteration over ALL m subspaces
+    (:func:`_lloyd_partials` in subspace mode — slices in-stage, so the
+    cache holds n raw vectors, not n·m exploded subvector rows), then
+    one grouped aggregate collects the k·m tiny centroid rows. Training
+    actions: 1 init + iters jobs total. At 100 TB train on an
+    id-bounded sample, like :func:`kmeans_centroids`.
     """
     from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     sub = dims // m
-    # the fused pass slices subvectors in-stage — the n·m posexplode,
-    # the broadcast join evaluating an interpreted dot per (row,
-    # centroid) and the two per-iteration groupBy exchanges are gone
-    # (guide §2.3/§2.4/§4.2); the cache holds n raw vectors, not n·m
-    # exploded subvector rows
     e = owned_persist(corpus.select(to_double_array(vec_col).alias("__av")))
     init = (
         corpus.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("v"))
@@ -2970,11 +2635,11 @@ def pq_train_codebooks(
         for s in range(m)
     ]
     for _ in range(iters):
-        parts = _pq_mean_partials(e, cents, m, sub, "__av", dist_digits)
         rows = (
-            parts.groupBy("s", "cid", "d")
-            .agg(F.round(F.sum("sm") / F.sum("c"), mean_digits).alias("cx"))
-            .groupBy("s", "cid")
+            _lloyd_partials(e, "__av", cents, dist_digits, subspaces=True)
+            .groupBy("g", "cid", "d")
+            .agg(F.round(F.sum("s") / F.sum("c"), mean_digits).alias("cx"))
+            .groupBy("g", "cid")
             .agg(
                 F.array_sort(
                     F.collect_list(F.struct(F.col("d"), F.col("cx")))
@@ -2984,7 +2649,7 @@ def pq_train_codebooks(
         )
         cents = [[] for _ in range(m)]
         for r in rows:
-            cents[int(r.s)].append((int(r.cid), [float(p.cx) for p in r.dc]))
+            cents[int(r.g)].append((int(r.cid), [float(p.cx) for p in r.dc]))
         cents = [sorted(cs) for cs in cents]
     return cents
 
@@ -3004,69 +2669,40 @@ def pq_encode(
     squared distances = the reconstruction error of the PQ
     approximation).
 
-    One Arrow pass (guide §4.2): the old projection evaluated m·k
-    interpreted ``dot`` folds per row (higher-order functions are not
-    codegen'd). In-stage: j-order distance folds (identical IEEE op
-    sequence as the staged-column expressions), exact rounded argmin
-    per subspace via :func:`_best_cid_rows` on the negated distances
-    (smallest-cid tie-break = the old ``array_position(d,
-    array_min(d))`` first-position rule, codebooks being cid-ascending),
-    winner distances rounded with :func:`_round_half_up_py` (the JVM
-    Round twin) and summed left-assoc in s order — bit-identical
-    ``codes`` and ``sq_err``.
+    One kernel pass in subspace mode: exact rounded argmin per subspace
+    via :func:`_best_cols` on the negated distances (smallest-cid
+    tie-break = the ``array_position(d, array_min(d))`` first-position
+    rule, codebooks being cid-ascending), winner distances rounded with
+    :func:`_round_half_up_py` and summed left-assoc in s order —
+    bit-identical ``codes`` and ``sq_err``.
     """
     import numpy as np
 
     m = len(codebooks)
-    sub = len(codebooks[0][0][1])
-    mats = []
-    for s in range(m):
-        cids, cmat = _cents_matrix(codebooks[s])
-        mats.append((cids, cmat))
     extra_schema = [(c, dict(corpus.dtypes)[c]) for c in extra_cols]
     id_type = dict(corpus.dtypes)[id_col]
 
-    def encode_batches(batches):
+    def task(parts):
         import pandas as pd
 
-        for pdf in batches:
+        for pdf, _vs, acc, s, cids in parts:
             n = len(pdf)
-            if n == 0:
+            if s == 0:
+                codes, err = [], None
+            win = _best_cols(acc, cids, dist_digits)
+            codes.append(cids[win])
+            emin = np.fromiter(
+                (_round_half_up_py(float(-acc[r, win[r]]), dist_digits) for r in range(n)),
+                dtype=np.float64,
+                count=n,
+            )
+            err = emin if err is None else err + emin  # s-order fold
+            if s < m - 1:
                 continue
-            v = np.stack(pdf["__av"].to_numpy()).astype(np.float64)
-            code_cols = []
-            err = None
-            for s in range(m):
-                cids, cmat = mats[s]
-                sv = v[:, s * sub : (s + 1) * sub]
-                vv = np.zeros(n, dtype=np.float64)
-                c2 = np.zeros(len(cids), dtype=np.float64)
-                acc = np.zeros((n, len(cids)), dtype=np.float64)
-                for j in range(sub):  # in-order folds (cross-engine)
-                    vv += sv[:, j] * sv[:, j]
-                    c2 += cmat[:, j] * cmat[:, j]
-                    acc += sv[:, j : j + 1] * cmat[:, j][None, :]
-                d2 = (vv[:, None] - 2.0 * acc) + c2[None, :]
-                best = _best_cid_rows(-d2, cids, dist_digits)
-                code_cols.append(best)
-                idx_of = {int(c): i for i, c in enumerate(cids)}
-                emin = np.fromiter(
-                    (
-                        _round_half_up_py(float(d2[r, idx_of[int(best[r])]]), dist_digits)
-                        for r in range(n)
-                    ),
-                    dtype=np.float64,
-                    count=n,
-                )
-                err = emin if err is None else err + emin  # s-order fold
-            codes = [
-                "-".join(str(int(code_cols[s][r])) for s in range(m))
-                for r in range(n)
-            ]
             cols = {id_col: pdf[id_col].to_numpy()}
             for c, _t in extra_schema:
                 cols[c] = pdf[c].to_numpy()
-            cols["codes"] = codes
+            cols["codes"] = ["-".join(str(int(c)) for c in row) for row in zip(*codes)]
             cols["sq_err"] = err
             yield pd.DataFrame(cols)
 
@@ -3075,9 +2711,76 @@ def pq_encode(
         + "".join(f", {c} {t}" for c, t in extra_schema)
         + ", codes string, sq_err double"
     )
-    return corpus.select(
-        F.col(id_col), *extra_cols, to_double_array(vec_col).alias("__av")
-    ).mapInPandas(encode_batches, schema=schema)
+    return _vector_pass(
+        corpus.select(F.col(id_col), *extra_cols, to_double_array(vec_col).alias("__av")),
+        schema,
+        task,
+        mats=[_cents_matrix(book) for book in codebooks],
+        metric="l2",
+        subspaces=True,
+    )
+
+
+def _adc_lut(subvecs: list[list[float]], books: list[list[tuple[int, list[float]]]], dist_digits: int) -> list[list[float]]:
+    """ADC lookup table for one query: per subspace s, a cid-indexed
+    list of the rounded dot-product-form distances from ``subvecs[s]``
+    to every centroid of ``books[s]`` (gaps from dropped clusters hold
+    +inf — no code references them). Driver-side left folds,
+    IEEE-identical to the engines' in-order folds."""
+    luts = []
+    for q, book in zip(subvecs, books):
+        qq = _py_sq_norm(q)
+        ents = [float("inf")] * (max(cid for cid, _ in book) + 1)
+        for cid, c in book:
+            ents[cid] = round(qq - 2.0 * sum_ip(q, c) + _py_sq_norm(c), dist_digits)
+        luts.append(ents)
+    return luts
+
+
+def _adc_topk(
+    coded: DataFrame,
+    id_col: str,
+    probe_rows: list[tuple],
+    keys: list[tuple[str, str]],
+    m: int,
+    k: int,
+) -> DataFrame:
+    """Shared ADC scoring tail: the per-query (per probed cell, with
+    ``keys``) LUT rows travel as a BROADCAST frame — equi-joined on the
+    cell ``keys`` (a BroadcastHashJoin pruning to the probed inverted
+    lists) or, without keys, crossJoined (every query scores every
+    row); a candidate's distance is the s-ordered sum of its m code
+    lookups, ranked ``(adc_dist asc, neighbor_id asc)``. LUT size
+    never touches the plan — the |Q|-way union of literal-LUT branches
+    it replaced duplicated the coded subtree per query (plan build
+    14.4 s vs 2.8 s of execution at |Q|=10). Returns ``query_id,
+    neighbor_id, adc_dist, rn`` (top-``k``)."""
+    schema = "query_id bigint, " + "".join(f"{n} {t}, " for n, t in keys)
+    probe_df = coded.sparkSession.createDataFrame(
+        probe_rows, schema + "__luts array<array<double>>"
+    )
+    split = F.split(F.col("codes"), "-")
+    adc = F.lit(0.0)
+    for s in range(m):  # fixed s=0..m-1 fold order, as the oracle sums
+        adc = adc + F.element_at(
+            F.element_at("__luts", s + 1),
+            F.element_at(split, s + 1).cast("int") + 1,
+        )
+    joined = (
+        coded.join(F.broadcast(probe_df), [n for n, _ in keys])
+        if keys
+        else coded.crossJoin(F.broadcast(probe_df))
+    )
+    scored = joined.filter(F.col(id_col) != F.col("query_id")).select(
+        "query_id", F.col(id_col).alias("neighbor_id"), adc.alias("adc_dist")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rn") <= k)
+    )
 
 
 def pq_adc_topk(
@@ -3099,67 +2802,17 @@ def pq_adc_topk(
     ``queries_subvecs``: [(query_id, [subvector per subspace])] —
     driver-known queries (the few-queries × huge-corpus shape, like
     :func:`knn_bruteforce`). Table entries use the same rounded
-    dot-product-form distance as :func:`pq_encode`, computed with
-    Python's left-fold (IEEE-identical to the engines' in-order
-    folds), so results reproduce verbatim in the oracle.
-
-    Serving-path plan shape (VERDICT r6 #2): the per-query LUTs travel
-    as a BROADCAST DataFrame (one row per query, ``m`` cid-indexed
-    distance arrays), crossJoined with the coded corpus — a
-    BroadcastNestedLoopJoin, the sanctioned every-query-scores-every-
-    row shape (there is no equi key between the query set and the
-    corpus, so a hash join cannot apply). The previous |Q|-way
-    unionByName of literal-LUT branches duplicated the ENTIRE
-    pq_encode subtree per query: plan build was 14.4 s vs 2.8 s of
-    execution at |Q|=10, and grew with |Q|·k·m literal count. Now the
-    coded subtree appears ONCE and LUT size never touches the plan.
+    dot-product-form distance as :func:`pq_encode` (:func:`_adc_lut`),
+    so results reproduce verbatim in the oracle. Scoring is the shared
+    :func:`_adc_topk` tail, crossJoined — there is no equi key between
+    the query set and the corpus.
     """
-    m = len(codebooks)
     coded = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col)
-    spark = corpus.sparkSession
-    lut_rows = []
-    for qid, subs in queries_subvecs:
-        per_sub = []
-        for s in range(m):
-            q = subs[s]
-            qq = _py_sq_norm(q)
-            # cid-indexed table (codes are cids; gaps from dropped
-            # clusters get +inf — no code references them)
-            size = max(cid for cid, _ in codebooks[s]) + 1
-            ents = [float("inf")] * size
-            for cid, c in codebooks[s]:
-                dotqc = 0.0
-                for x, y in zip(q, c):
-                    dotqc += x * y
-                ents[cid] = round(qq - 2.0 * dotqc + _py_sq_norm(c), dist_digits)
-            per_sub.append(ents)
-        lut_rows.append((int(qid), per_sub))
-    lut_df = spark.createDataFrame(
-        lut_rows, "query_id bigint, __luts array<array<double>>"
-    )
-    split = F.split(F.col("codes"), "-")
-    adc = F.lit(0.0)
-    for s in range(m):  # fixed s=0..m-1 fold order, as the oracle sums
-        adc = adc + F.element_at(
-            F.element_at("__luts", s + 1),
-            F.element_at(split, s + 1).cast("int") + 1,
-        )
-    scored = (
-        coded.crossJoin(F.broadcast(lut_df))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            adc.alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k)
-    )
+    rows = [
+        (int(qid), _adc_lut(subs, codebooks, dist_digits))
+        for qid, subs in queries_subvecs
+    ]
+    return _adc_topk(coded, id_col, rows, [], len(codebooks), k)
 
 
 # ---------------------------------------------------------------------------
@@ -3249,72 +2902,22 @@ def ivfpq_search(
     QUERY'S residual in that cell (q − cell centroid) — the asymmetric
     part of IVFADC. All driver-side math uses the same left-fold IEEE
     ops as the engines, so the oracle reproduces rankings verbatim.
-
-    Serving-path plan shape (VERDICT r6 #2): the (query, probed cell)
-    LUTs travel as a BROADCAST DataFrame equi-joined on ``cell`` — a
-    BroadcastHashJoin against the coded corpus that prunes to the
-    probed inverted lists, replacing the |Q|·n_probe-way unionByName of
-    literal-LUT branches (each of which duplicated the whole coded
-    subtree in the plan). LUT size never touches the plan."""
+    The (query, probed cell) LUTs are equi-joined on ``cell`` by the
+    shared :func:`_adc_topk` tail."""
     m = len(books)
-    spark = coded.sparkSession
+    sub = len(books[0][0][1])
     probe_rows = []
     for qid, qvec in queries:
         qq = _py_sq_norm(qvec)
         cell_d = sorted(
-            (
-                round(
-                    qq
-                    - 2.0 * sum_ip(qvec, cvec)
-                    + _py_sq_norm(cvec),
-                    dist_digits,
-                ),
-                cid,
-                cvec,
-            )
+            (round(qq - 2.0 * sum_ip(qvec, cvec) + _py_sq_norm(cvec), dist_digits), cid, cvec)
             for cid, cvec in coarse_book
         )[:n_probe]
         for _d, cell, cvec in cell_d:
             qr = [x - y for x, y in zip(qvec, cvec)]
-            per_sub = []
-            sub = len(books[0][0][1])
-            for s in range(m):
-                q = qr[s * sub : (s + 1) * sub]
-                qq_s = _py_sq_norm(q)
-                size = max(cid for cid, _ in books[s]) + 1
-                ents = [float("inf")] * size
-                for cid, c in books[s]:
-                    ents[cid] = round(
-                        qq_s - 2.0 * sum_ip(q, c) + _py_sq_norm(c), dist_digits
-                    )
-                per_sub.append(ents)
-            probe_rows.append((int(qid), int(cell), per_sub))
-    probe_df = spark.createDataFrame(
-        probe_rows, "query_id bigint, cell int, __luts array<array<double>>"
-    )
-    split = F.split(F.col("codes"), "-")
-    adc = F.lit(0.0)
-    for s in range(m):  # fixed s=0..m-1 fold order, as the oracle sums
-        adc = adc + F.element_at(
-            F.element_at("__luts", s + 1),
-            F.element_at(split, s + 1).cast("int") + 1,
-        )
-    scored = (
-        coded.join(F.broadcast(probe_df), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            adc.alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k)
-    )
+            subvecs = [qr[s * sub : (s + 1) * sub] for s in range(m)]
+            probe_rows.append((int(qid), int(cell), _adc_lut(subvecs, books, dist_digits)))
+    return _adc_topk(coded, "vec_id", probe_rows, [("cell", "int")], m, k)
 
 
 def sum_ip(a: list[float], b: list[float]) -> float:
@@ -3402,19 +3005,17 @@ def ivfpq_two_level_search(
     round_digits: int = 4,
 ) -> DataFrame:
     """Two-level IVFADC search: each driver-known query routes through
-    the hierarchy exactly like :func:`ivf_two_level_query_probes`
-    (rounded unit-dot, cid tie-break — top ``n_probe_super`` supers,
-    top ``n_probe_sub`` subs within each), then builds ONE ADC lookup
+    the hierarchy like :func:`ivf_two_level_query_probes` (rounded
+    unit-dot, cid tie-break — top ``n_probe_super`` supers, top
+    ``n_probe_sub`` subs within each), then builds ONE ADC lookup
     table per probed (scid, sub) from the query's residual against
     that SUB centroid — the asymmetric half of q85's IVFADC, aimed at
-    the hierarchy's finest level. LUTs travel as a broadcast frame
-    equi-joined on (scid, sub) (BroadcastHashJoin pruning to the
-    probed lists; LUT size never touches the plan — the q85 lesson).
-    Returns ``query_id, neighbor_id, adc_dist, rn`` (top-``k``)."""
+    the hierarchy's finest level. The LUTs are equi-joined on (scid,
+    sub) by the shared :func:`_adc_topk` tail. Returns ``query_id,
+    neighbor_id, adc_dist, rn`` (top-``k``)."""
     m = len(books)
     sub_len = len(books[0][0][1])
-    spark = coded.sparkSession
-    supers_u = [(cid, _py_unit(v)) for cid, v in supers]
+    supers_u = _unit_cents(supers)
     subs_by_g: dict[int, list[tuple[int, list[float]]]] = {}
     for g, sc, v in subs:
         subs_by_g.setdefault(g, []).append((sc, v))
@@ -3433,41 +3034,11 @@ def ivfpq_two_level_search(
             )[:n_probe_sub]
             for _negb, sc, cvec in top_b:
                 qr = [x - y for x, y in zip(qvec, cvec)]
-                per_sub = []
-                for s in range(m):
-                    q = qr[s * sub_len : (s + 1) * sub_len]
-                    qq_s = _py_sq_norm(q)
-                    size = max(cid for cid, _ in books[s]) + 1
-                    ents = [float("inf")] * size
-                    for cid, c in books[s]:
-                        ents[cid] = round(
-                            qq_s - 2.0 * sum_ip(q, c) + _py_sq_norm(c),
-                            dist_digits,
-                        )
-                    per_sub.append(ents)
-                probe_rows.append((int(qid), int(scid), int(sc), per_sub))
-    probe_df = spark.createDataFrame(
-        probe_rows,
-        "query_id bigint, scid int, sub int, __luts array<array<double>>",
-    )
-    split = F.split(F.col("codes"), "-")
-    adc = F.lit(0.0)
-    for s in range(m):  # fixed s=0..m-1 fold order, as the oracle sums
-        adc = adc + F.element_at(
-            F.element_at("__luts", s + 1),
-            F.element_at(split, s + 1).cast("int") + 1,
-        )
-    scored = (
-        coded.join(F.broadcast(probe_df), ["scid", "sub"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", adc.alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k)
+                subvecs = [qr[s * sub_len : (s + 1) * sub_len] for s in range(m)]
+                luts = _adc_lut(subvecs, books, dist_digits)
+                probe_rows.append((int(qid), int(scid), int(sc), luts))
+    return _adc_topk(
+        coded, "neighbor_id", probe_rows, [("scid", "int"), ("sub", "int")], m, k
     )
 
 
@@ -3578,20 +3149,15 @@ def rotate_vectors(
     extra_schema = [(c, dict(df.dtypes)[c]) for c in extra_cols]
     id_type = dict(df.dtypes)[id_col]
 
-    # dims² multiply-adds per row ran as interpreted HOF folds (not
-    # codegen'd — guide §4.2); one Arrow pass computes the identical
-    # j-order accumulation per output dim (the _np_scores sequence
-    # with the rotation rows as the "centroid" matrix). Rounding stays
-    # JVM-side (F.round semantics untouched) on the staged output
+    # dims² multiply-adds per row as one kernel pass (the j-order fold
+    # per output dim, the rotation rows as the scoring matrix) instead
+    # of interpreted HOF folds (not codegen'd — guide §4.2). Rounding
+    # stays JVM-side (F.round semantics untouched) on the staged output
     # column — d cheap ops per row, not dims².
-    def rot_batches(batches):
+    def task(parts):
         import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            acc = _np_scores(v, rmat)  # (n, d_out), j-order fold
+        for pdf, _vs, acc, _g, _c in parts:
             cols = {id_col: pdf[id_col].to_numpy()}
             for c, _t in extra_schema:
                 cols[c] = pdf[c].to_numpy()
@@ -3603,9 +3169,12 @@ def rotate_vectors(
         + "".join(f", {c} {t}" for c, t in extra_schema)
         + f", {out_col} array<double>"
     )
-    raw = df.select(
-        F.col(id_col), *extra_cols, to_double_array(vec_col).alias("__v")
-    ).mapInPandas(rot_batches, schema=schema)
+    raw = _vector_pass(
+        df.select(F.col(id_col), *extra_cols, to_double_array(vec_col).alias("__av")),
+        schema,
+        task,
+        mats=(None, rmat),
+    )
     if round_digits is None:
         return raw
     return raw.withColumn(
@@ -3637,8 +3206,8 @@ def prototypicality_prune(
     are k-sized and broadcast.
 
     Returns ``vec_id, cid, proto_sim, proto_rank, n_in_cluster,
-    keep``. Scale: one Arrow-batched centroid-sim pass (k·n rows),
-    one partitioned window per cluster — no global sort, no driver
+    keep``. Scale: one fused assignment pass (no score shuffle), one
+    partitioned window per cluster — no global sort, no driver
     state beyond the k centroids."""
     if not 0 <= prune_pct <= 100:
         raise ValueError(f"prune_pct must be in [0, 100], got {prune_pct}")
@@ -3651,11 +3220,15 @@ def prototypicality_prune(
             vec_col=vec_col,
             round_digits=round_digits,
         )
-    u = unit_vectors(corpus, id_col, vec_col, "id", "vn")
-    sims = centroid_unit_sims(u, [(cid, _py_unit(v)) for cid, v in centroids])
-    assigned = nearest_centroid(
-        sims, ["id"], round_digits, keep_sim="proto_sim"
-    ).select("id", "cid", "proto_sim")
+    u = _assign(
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col)),
+        "id",
+        vec_col,
+        _unit_cents(centroids),
+        round_digits,
+        keep_sim="__rs",
+    )
+    assigned = u.select("id", "cid", F.round("__rs", round_digits).alias("proto_sim"))
     counts = assigned.groupBy("cid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_in_cluster")
     )
@@ -3717,8 +3290,7 @@ def hard_negatives(
         (F.col("anchor_id") != F.col("neighbor_id"))
         & (F.col("__al") != F.col("neighbor_label"))
     )
-    # Arrow-pass scoring (same j-order dot fold); label type follows
-    # the caller's column
+    # kernel-pass scoring; label type follows the caller's column
     sims = _pair_scores_arrow(
         cand,
         [
@@ -3911,10 +3483,9 @@ def _ivf_best_assignment(
     centroids: list[tuple[int, list[float]]] | None,
 ) -> DataFrame:
     """Shared q53 assignment discipline for the IVF audit operators:
-    train (or accept) centroids, unit-normalize, score every vector
-    against every centroid (Arrow stage), and keep the best cell per
-    vector with the deterministic (rounded-sim desc, cid asc)
-    tie-break. Returns ``id, cid, __sim`` (sim rounded to
+    train (or accept) centroids and keep the best cell per vector with
+    the deterministic (rounded-sim desc, cid asc) tie-break — one fused
+    :func:`_assign` pass. Returns ``id, cid, __sim`` (sim rounded to
     ``round_digits``)."""
     if centroids is None:
         centroids = kmeans_centroids(
@@ -3925,12 +3496,14 @@ def _ivf_best_assignment(
             vec_col=vec_col,
             round_digits=round_digits,
         )
-    cents_u = [(cid, _py_unit(v)) for cid, v in centroids]
-    u = unit_vectors(corpus, id_col, vec_col, "id", "vn")
-    sims = centroid_unit_sims(u, cents_u)
-    return nearest_centroid(
-        sims, ["id"], round_digits, keep_sim="__sim"
-    ).select("id", "cid", "__sim")
+    return _assign(
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col)),
+        "id",
+        vec_col,
+        _unit_cents(centroids),
+        round_digits,
+        keep_sim="__rs",
+    ).select("id", "cid", F.round("__rs", round_digits).alias("__sim"))
 
 
 def ivf_cell_quality(

@@ -129,10 +129,6 @@ def stage_calendar(spark: SparkSession, path: str) -> DataFrame:
     return read_csv_typed(spark, path, CALENDAR_CAST_MAP, strict=False)
 
 
-def stage_reviews(spark: SparkSession, path: str) -> DataFrame:
-    return read_csv_typed(spark, path, REVIEWS_CAST_MAP, strict=False)
-
-
 # --- dimensions (jobs/final_dim_load.py) ---
 
 HOST_SPEC = Scd2Spec(

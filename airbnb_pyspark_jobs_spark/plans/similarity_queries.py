@@ -320,7 +320,7 @@ _D_COS = (
 _CU_NORM = "list_transform(cenv, x -> x / sqrt(list_dot_product(cenv, cenv)))"
 # Assignment metric: ROUNDED unit-vector dot (corpus units from the u
 # CTE, centroid units normalized with the same fold order) — matches
-# the Spark side's centroid_unit_sims Arrow stage bit-for-bit.
+# the Spark side's vector-pass kernel scores bit-for-bit.
 _ASSIGN_SIM = "round(list_dot_product(u.vn, c.cnv), 4)"
 
 

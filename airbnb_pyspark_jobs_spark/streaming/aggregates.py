@@ -746,24 +746,6 @@ def write_bigram_partial(
     ).parquet(os.path.join(path, PARTIAL_DIRNAME.format(n=batch_id)))
 
 
-def materialize_bigram_stream(
-    stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    group_col: str = "source",
-    text_col: str = "text",
-):
-    """Wire a doc stream into bigram-count partials; returns the
-    DataStreamWriter (caller picks the trigger and starts it)."""
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        write_bigram_partial(batch, batch_id, path, group_col, text_col)
-
-    return stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
-
-
 def compact_bigram_partials(
     spark: SparkSession, path: str, before_batch: int | None = None
 ) -> int:

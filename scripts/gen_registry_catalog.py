@@ -2,7 +2,8 @@
 
 SURVEY.md §2.11's hand-maintained addendum table drifted as the
 registry grew (VERDICT r6 #7); this catalog is derived FROM the
-registry itself — name, families, oracle status, source anchor and a
+registry itself — name, families, oracle status, source anchor
+(``file::function``, so editing a plans module never moves it) and a
 one-line semantics summary (the query function's docstring first line,
 else the first line of the nearest ``# ---`` banner comment above its
 definition). ``tests/test_registry_catalog.py`` regenerates and diffs,
@@ -71,7 +72,7 @@ def build() -> str:
         fams = ", ".join(sorted(QUERY_FAMILIES.get(name, set())))
         oracle = "oracle" if name in ORACLES else "rows-only"
         rows.append(
-            f"| {name} | {fams} | {oracle} | `{rel}:{code.co_firstlineno}` "
+            f"| {name} | {fams} | {oracle} | `{rel}::{fn.__name__}` "
             f"| {summary.replace('|', '/')} |"
         )
     return (

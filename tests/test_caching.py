@@ -106,3 +106,40 @@ def test_nested_query_invocation_keeps_composers_caches(spark):
             ORACLES.pop(name, None)
             QUERY_FAMILIES.pop(name, None)
         release_owned_caches()
+
+
+def test_flat_checkpoint_concurrent_callers_restore_conf(spark):
+    """`flat_checkpoint` toggles the session-global constraint-
+    propagation conf; concurrent callers must not interleave the
+    read-toggle-restore (a thread reading another's ``false`` as its
+    "previous" value would leave propagation off for the session)."""
+    import threading
+
+    from airbnb_pyspark_jobs_spark.caching import flat_checkpoint
+
+    key = "spark.sql.constraintPropagation.enabled"
+    original = spark.conf.get(key)
+    n_threads = 6
+    barrier = threading.Barrier(n_threads)
+    counts: list[int] = []
+    errors: list[BaseException] = []
+
+    def worker(i: int) -> None:
+        try:
+            barrier.wait()
+            for r in range(3):
+                df = spark.range(10 + i + r)
+                counts.append(flat_checkpoint(df).count())
+        except BaseException as exc:  # surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(n_threads)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    assert sorted(counts) == sorted(
+        10 + i + r for i in range(n_threads) for r in range(3)
+    )
+    assert spark.conf.get(key) == original

@@ -414,21 +414,20 @@ def test_q159_calibration_joins_are_equi(spark):
 
 
 def test_q160_cell_quality_assignment_is_partial_aggregating(spark):
-    """The cell-quality audit's assignment argmax must be the r11
-    groupBy + max(struct(round(sim), -cid)) shape — partial-aggregated
-    map-side (the k rows per id collapse BEFORE the exchange), never a
-    row_number window (which sorted all n·k score rows), and never an
-    unpartitioned window or cartesian product anywhere in the plan."""
+    """The cell-quality audit's assignment argmax must collapse the k
+    score rows per id map-side, BEFORE any exchange: it runs as the
+    fused argmax inside the similarity kernel's Arrow pass, so the plan
+    has no rank window at all (a row_number window sorted all n·k score
+    rows), exactly one exchange (the per-cell aggregate's) and no
+    cartesian product."""
     from airbnb_pyspark_jobs_spark.caching import release_owned_caches
 
     df = QUERIES["q160_ivf_cell_quality"](spark, SF_DIR)
     plan = _executed_plan(df)
-    # rank-1 selection as an aggregate, not a window sort
-    assert "max(struct(" in plan or "max(__m" in plan, plan[:2000]
-    for line in plan.splitlines():
-        if "windowspecdefinition" in line:
-            # any remaining window must be key-partitioned, not global
-            assert "windowspecdefinition(id" in line, line
+    # rank-1 selection fused into the map-side Arrow pass
+    assert "MapInPandas" in plan, plan[:2000]
+    assert "windowspecdefinition" not in plan, plan[:2000]
+    assert plan.count("Exchange") == 1, plan[:2000]
     assert "CartesianProduct" not in plan
     release_owned_caches()
 

@@ -533,3 +533,122 @@ def test_two_level_quantizer_covers_corpus_and_routes_probes(spark):
         r.neighbor_id: (r.scid, r.sub) for r in lists.select("neighbor_id", "scid", "sub").collect()
     }
     assert all((r.query_id, cell_of[r.neighbor_id]) in probed for r in got)
+
+
+def _tie_corpus(spark):
+    """Integer-grid 3-d vectors (many EXACT rounded-sim ties, the zero
+    vector whose scores are all NaN) plus near-tie rows whose raw sims
+    to two centroids differ below the 4-digit grid (the argmax must
+    fall back to the rounded comparison, not the raw max)."""
+    import itertools
+
+    rows = [
+        (i, [float(x) for x in v])
+        for i, v in enumerate(itertools.product([-1, 0, 1, 2], repeat=3))
+    ]
+    base = len(rows)
+    for j, eps in enumerate([1e-6, -1e-6, 3e-6, 4e-5, 6e-5]):
+        rows.append((base + 2 * j, [1.0, 1.0 + eps, 0.0]))
+        rows.append((base + 2 * j + 1, [1.0 + eps, 1.0, 0.5]))
+    return spark.createDataFrame(rows, "id long, v array<double>")
+
+
+def _window_reference(sims, parts):
+    """The selection the fused argmax must reproduce, written as the
+    rank-1 window: round(sim, 4) desc, cid asc."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(*parts).orderBy(
+        F.round("__rsim", 4).desc(), F.col("cid").asc()
+    )
+    return (
+        sims.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select(*parts, "cid", "__rsim")
+    )
+
+
+def _rows_by_key(df, key_cols, val_cols):
+    return {
+        tuple(r[c] for c in key_cols): tuple(r[c] for c in val_cols)
+        for r in df.collect()
+    }
+
+
+def test_fused_assignment_matches_window_selection_on_ties(spark):
+    """The kernel's fused assignment (flat and grouped) picks exactly
+    the ``row_number() over (partition by id order by round(sim, 4)
+    desc, cid asc) = 1`` row — on exact rounded ties, sub-grid near
+    ties, a zero-norm row (NaN scores) and a one-centroid group — and
+    its kept raw sim is the winner's score."""
+    from airbnb_pyspark_jobs_spark.operators.similarity import (
+        _assign,
+        _centroid_sims,
+        _unit_cents,
+    )
+
+    corpus = _tie_corpus(spark)
+    # cids deliberately out of order
+    flat = _unit_cents(
+        [(7, [1.0, 0.0, 0.0]), (3, [0.0, 1.0, 0.0]), (5, [1.0, 1.0, 0.0]),
+         (2, [0.0, 0.0, 1.0]), (9, [1.0, 1.0, 1.0])]
+    )
+    grouped = {
+        0: _unit_cents([(7, [1.0, 0.0, 0.0]), (3, [0.0, 1.0, 0.0]), (1, [0.0, -1.0, 0.0])]),
+        1: _unit_cents([(4, [1.0, 2.0, 3.0])]),  # single-centroid group
+    }
+    gcorpus = corpus.withColumn("grp", (F.col("id") % 2).cast("int"))
+
+    for frame, cents, group in ((corpus, flat, None), (gcorpus, grouped, "grp")):
+        parts = ["id"] if group is None else ["id", group]
+        sims = _centroid_sims(frame, "id", "v", cents, group_col=group)
+        ref = _rows_by_key(_window_reference(sims, parts), parts, ["cid", "__rsim"])
+        got = _rows_by_key(
+            _assign(frame, "id", "v", cents, 4, group_col=group, keep_sim="__rsim"),
+            parts,
+            ["cid", "__rsim"],
+        )
+        assert got == ref
+        assert len(got) == corpus.count()
+
+        # the data really exercises ties: several rows with >1 centroid
+        # at the winning rounded sim, and the all-NaN zero vector
+        tied = (
+            sims.withColumn("__r", F.round("__rsim", 4))
+            .groupBy(*parts)
+            .agg(
+                F.max("__r").alias("__m"),
+                F.collect_list("__r").alias("__all"),
+            )
+            .filter(F.expr("size(filter(__all, x -> x = __m)) > 1"))
+            .count()
+        )
+        assert tied >= 5
+        # the zero vector (id 21 in product order) scores NaN against
+        # every centroid (NULL once across the Arrow boundary): the
+        # smallest cid of its centroid set wins
+        zero = got[(21,) if group is None else (21, 1)]
+        assert zero == ((2, None) if group is None else (4, None))
+
+
+def test_similarity_module_has_one_arrow_pass():
+    """Every Arrow pass in operators/similarity.py goes through the
+    vector-pass kernel: exactly one ``.mapInPandas(`` call, inside
+    ``_vector_pass``."""
+    import ast
+    import inspect
+
+    src = inspect.getsource(SIM)
+    tree = ast.parse(src)
+    owners = []
+    for fn in ast.walk(tree):
+        if isinstance(fn, ast.FunctionDef) and fn in tree.body:
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "mapInPandas"
+                ):
+                    owners.append(fn.name)
+    assert src.count(".mapInPandas(") == 1
+    assert owners == ["_vector_pass"]
