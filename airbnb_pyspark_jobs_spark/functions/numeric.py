@@ -25,6 +25,9 @@ DECIMAL(18, d) so the ×10^d product stays inside BIGINT).
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -106,3 +109,53 @@ def decimal_ratio_round_sql(num_expr: str, den_expr: str, digits: int = 6) -> st
         f"CAST(CASE WHEN {n} < 0 THEN -{q} ELSE {q} END AS DOUBLE)"
         f" / CAST({10**digits} AS DOUBLE)"
     )
+
+
+# ---------------------------------------------------------------------------
+# Python twins: the same arithmetic on the driver, for loops whose state
+# is collected once (q245/q267). Every double enters decimal arithmetic
+# through its SHORTEST round-trip repr — what Java's Double.toString (and
+# so Spark's Round and double->DECIMAL cast) sees — never through
+# ``Decimal(x)``, the full binary expansion, which can sit below a .5
+# boundary that the repr lands on.
+# ---------------------------------------------------------------------------
+
+
+def decimal_py(x: float, scale: int) -> Decimal:
+    """Twin of Spark's ``CAST(x AS DECIMAL(p, scale))`` for a finite
+    double: the shortest repr, rounded HALF_UP (away from zero) to
+    ``scale`` decimals."""
+    return Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), rounding=ROUND_HALF_UP)
+
+
+def round_half_up_py(x: float, digits: int) -> float:
+    """Exact twin of Spark's ``Round(double, digits)``: Java rounds
+    ``BigDecimal.valueOf(x)`` — the shortest round-trip decimal repr of
+    the double — HALF_UP, which is what :func:`decimal_py` does.
+    Non-finite values pass through, as in Spark."""
+    if math.isnan(x) or math.isinf(x):
+        return x
+    return float(decimal_py(x, digits))
+
+
+def exact_mean_round_py(
+    sum_value: Decimal, count: int, digits: int = 6, sum_scale: int | None = None
+) -> float:
+    """Twin of :func:`exact_mean_round` for an exact ``Decimal`` sum:
+    the same staging at ``sum_scale``, the same integer quotient and
+    the same final double divide — so a negative sum that rounds to 0
+    gives ``-0.0``, as the Spark expression does."""
+    if sum_scale is None:
+        sum_scale = digits
+    up = 10 ** max(0, digits - sum_scale)
+    m = 10 ** max(0, sum_scale - digits)
+    step = Decimal(1).scaleb(-sum_scale)
+    s = int(sum_value.quantize(step, rounding=ROUND_HALF_UP).scaleb(sum_scale))
+    q = float((abs(s) * 2 * up + count * m) // (2 * m * count))
+    return (-q if s < 0 else q) / float(10**digits)
+
+
+def decimal_ratio_round_py(num: int, den: int, digits: int = 6) -> float:
+    """Twin of :func:`decimal_ratio_round` (``den`` > 0)."""
+    q = (2 * 10**digits * abs(num) + den) // (2 * den)
+    return float(-q if num < 0 else q) / float(10**digits)

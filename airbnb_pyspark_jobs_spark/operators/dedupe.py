@@ -105,11 +105,10 @@ def ngram_jaccard_pairs(
         # document frequency as a window count over s (one shuffle by s,
         # no extra groupBy+semi-join pass). The FILTERED frame is what
         # every consumer (sizes + both self-join sides) reads, so THAT
-        # is the frame to persist — r12 plan audit: with only the raw
-        # shingle leaf cached, the window subtree was evaluated 4× (the
-        # self-join sides and both size joins re-ran shuffle+sort+count
-        # from the cache; plans/r12/q44_..._before.txt shows 4 Window
-        # nodes, after 1 — guide §2.4/§5).
+        # is the frame to persist: with only the raw shingle leaf cached,
+        # the window subtree is evaluated 4× (the self-join sides and
+        # both size joins re-run shuffle+sort+count from the cache — 4
+        # Window nodes in q44's executed plan, 1 with this persist).
         from pyspark.sql.window import Window
 
         sh = (

@@ -31,8 +31,8 @@ sequence as ``functions.vectors.dot`` and DuckDB's
 the op sequence of :func:`unit_vectors`. Raw scores are therefore
 bit-identical to the JVM and oracle expressions. Rounding happens
 JVM-side (``F.round`` on a raw score) or, for an in-stage argmax, via
-:func:`_round_half_up_py` — the exact twin of Spark's ``Round`` —
-applied only to tie contenders (:func:`_best_cols`), so a fused
+``functions.numeric.round_half_up_py`` — the exact twin of Spark's
+``Round`` — applied only to tie contenders (:func:`_best_cols`), so a fused
 assignment picks exactly the row ``row_number() over (partition by id
 order by round(sim, d) desc, cid asc) = 1`` picks.
 """
@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from airbnb_pyspark_jobs_spark.functions.numeric import round_half_up_py
 from airbnb_pyspark_jobs_spark.functions.vectors import dot, norm, to_double_array
 
 
@@ -161,29 +162,6 @@ def _vector_pass(
     return frame.mapInPandas(lambda batches: task(parts(batches)), schema=schema)
 
 
-def _round_half_up_py(x: float, digits: int) -> float:
-    """Exact Python twin of Spark's ``Round(double, digits)``: Java
-    rounds ``BigDecimal.valueOf(x)`` — the SHORTEST round-trip decimal
-    repr of the double, not its full binary expansion — HALF_UP.
-    Python ``repr(float)`` is the same shortest round-trip decimal, and
-    ``Decimal.quantize(..., ROUND_HALF_UP)`` the same rounding rule, so
-    this matches the JVM bit-for-bit. (``Decimal(x)`` directly would be
-    WRONG: the full binary expansion of a double whose shortest repr
-    ends exactly on a 5 can sit below the .5 boundary.) Non-finite
-    values pass through, as in Spark. Called only on bounded tie
-    contenders — never per element of a full score matrix."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    if math.isnan(x) or math.isinf(x):
-        return x
-    return float(
-        Decimal(repr(x)).quantize(
-            Decimal(1).scaleb(-digits), rounding=ROUND_HALF_UP
-        )
-    )
-
-
 def _best_cols(acc, cids, digits: int):
     """Per-row winning COLUMN of ``max(struct(round(sim, digits),
     -cid))`` — highest rounded score, smallest-cid tie-break, NaN
@@ -194,7 +172,7 @@ def _best_cols(acc, cids, digits: int):
     of the row max, it wins outright — rounding to the 10^-digits grid
     is monotone and two values more than one grid step apart cannot
     round equal, so no other score can round ≥ it. Slow path (rare):
-    the contenders are rounded exactly via :func:`_round_half_up_py`
+    the contenders are rounded exactly via :func:`round_half_up_py`
     and compared under (rounded desc, cid asc). Rows containing a NaN
     score resolve to the smallest cid among the NaN entries (NaN sorts
     greatest and all NaNs compare equal in Spark's ordering).
@@ -213,7 +191,7 @@ def _best_cols(acc, cids, digits: int):
     for r in np.nonzero(cont.sum(axis=1) > 1)[0]:
         win[ok[r]] = max(
             np.nonzero(cont[r])[0],
-            key=lambda c: (_round_half_up_py(float(a[r, c]), digits), -int(cids[c])),
+            key=lambda c: (round_half_up_py(float(a[r, c]), digits), -int(cids[c])),
         )
     return win
 
@@ -1732,7 +1710,7 @@ def ivf_two_level_lists_spill(
     # one fused kernel pass: super top-2, spill margin, sub argmax. The
     # rounded top-2 and the integer-unit margin replicate the oracle's
     # expressions exactly: ranking compares round(sim, digits) (desc, cid asc) via
-    # _round_half_up_py on the raw-max contenders (the _best_cols
+    # round_half_up_py on the raw-max contenders (the _best_cols
     # margin argument extended to rank 2), and the margin compares
     # round(sim·10^digits) BIGINTs with best = max over the two kept
     # rows (the guard for the round-then-scale vs scale-then-round
@@ -1740,7 +1718,7 @@ def ivf_two_level_lists_spill(
     # no comparable integer); assignment falls back to the
     # smallest-cid NaN rule shared with _best_cols.
     def units(x: float) -> int:
-        return int(_round_half_up_py(x * scale, 0))
+        return int(round_half_up_py(x * scale, 0))
 
     def picks(a) -> list[tuple[int, bool]]:
         """[(super column, is_spill)] for one row's super scores."""
@@ -1749,7 +1727,7 @@ def ivf_two_level_lists_spill(
         r2 = np.partition(a, len(a) - 2)[len(a) - 2]
         top = sorted(
             np.nonzero(a >= r2 - delta)[0],
-            key=lambda c: (-_round_half_up_py(float(a[c]), round_digits), int(scids[c])),
+            key=lambda c: (-round_half_up_py(float(a[c]), round_digits), int(scids[c])),
         )[:2]
         out = [(int(top[0]), False)]
         if len(top) > 1:
@@ -2673,7 +2651,7 @@ def pq_encode(
     via :func:`_best_cols` on the negated distances (smallest-cid
     tie-break = the ``array_position(d, array_min(d))`` first-position
     rule, codebooks being cid-ascending), winner distances rounded with
-    :func:`_round_half_up_py` and summed left-assoc in s order —
+    :func:`round_half_up_py` and summed left-assoc in s order —
     bit-identical ``codes`` and ``sq_err``.
     """
     import numpy as np
@@ -2692,7 +2670,7 @@ def pq_encode(
             win = _best_cols(acc, cids, dist_digits)
             codes.append(cids[win])
             emin = np.fromiter(
-                (_round_half_up_py(float(-acc[r, win[r]]), dist_digits) for r in range(n)),
+                (round_half_up_py(float(-acc[r, win[r]]), dist_digits) for r in range(n)),
                 dtype=np.float64,
                 count=n,
             )

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from airbnb_pyspark_jobs_spark.functions.numeric import decimal_ratio_round
+
 
 def tumbling_agg(
     events: DataFrame,
@@ -245,48 +247,84 @@ def time_decayed_sum(
     )
 
 
-def event_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    p_digits: int = 6,
-) -> DataFrame:
-    """First-order Markov transition matrix of event types: for each
-    ordered pair (from_type, to_type), the count of consecutive
-    same-user event pairs and the row-normalized transition
-    probability ``P(to | from)`` — the behavioral-model summary of an
-    event stream (and the input to next-event-prediction baselines).
+def transition_counts(events: DataFrame) -> DataFrame:
+    """``(from_type, to_type, n)``: the count of consecutive same-user
+    event pairs per ordered pair of ``event_type`` values — the
+    first-order Markov transition counts every transition query starts
+    from.
 
     Ordering within a user is (ts, event_id) — the id tie-break makes
     consecutive-pair extraction deterministic even under timestamp
-    collisions. Scale: one lag window PARTITIONED by user (the
-    natural entity key; never global), one tiny groupBy (|types|²),
-    counts exact, one division + round per output row."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    pairs = (
-        events.select(user_col, ts_col, id_col, F.col(type_col).alias("to_type"))
-        .withColumn("from_type", F.lag("to_type").over(w))
-        .filter(F.col("from_type").isNotNull())
-    )
-    counts = pairs.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    totals = counts.groupBy("from_type").agg(F.sum("n").cast("bigint").alias("__t"))
+    collisions. Scale: one lag window PARTITIONED by user (the natural
+    entity key; never global) and one groupBy whose output is bounded
+    by the type domain (|types|² rows)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
-        counts.join(F.broadcast(totals), "from_type")
-        .select(
-            "from_type",
-            "to_type",
-            "n",
-            F.round(
-                F.col("n").cast("double") / F.col("__t").cast("double"), p_digits
-            ).alias("p"),
+        events.select(
+            F.col("event_type").alias("to_type"),
+            F.lag("event_type").over(w).alias("from_type"),
         )
+        .filter(F.col("from_type").isNotNull())
+        .groupBy("from_type", "to_type")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
+
+
+def _with_totals(counts: DataFrame) -> DataFrame:
+    """``counts`` plus ``t``, the outgoing total of each from_type — a
+    window over the |types|²-row counts (one shuffle; a groupBy joined
+    back costs an extra broadcast job)."""
+    return counts.withColumn(
+        "t", F.sum("n").over(Window.partitionBy("from_type")).cast("bigint")
+    )
+
+
+def event_transitions(events: DataFrame, p_digits: int = 6) -> DataFrame:
+    """First-order Markov transition matrix of event types: for each
+    ordered pair (from_type, to_type), the count ``n`` of consecutive
+    same-user event pairs (:func:`transition_counts`) and the
+    row-normalized transition probability ``p = P(to | from)`` — the
+    behavioral-model summary of an event stream (and the input to
+    next-event-prediction baselines)."""
+    return _with_totals(transition_counts(events)).select(
+        "from_type",
+        "to_type",
+        "n",
+        F.round(
+            F.col("n").cast("double") / F.col("t").cast("double"), p_digits
+        ).alias("p"),
+    )
+
+
+# Rows a driver-side transition table may hold. The table is bounded by
+# the event-type domain (<= k² rows), never by the corpus; more rows
+# than this means the type column is not categorical.
+TRANSITION_TABLE_CAP = 10_000
+
+
+def collect_transition_table(events: DataFrame) -> list[tuple[str, str, int, float]]:
+    """``(from_type, to_type, t, p)`` rows of the transition matrix,
+    collected to the driver once, for fixed-point loops whose state is
+    a vector over event types (q245, q267). The corpus-sized stages —
+    the lag window, the pair counts and the 9-dp ``p =
+    decimal_ratio_round(n, t, 9)`` — run in Spark. The collect reads at most
+    ``TRANSITION_TABLE_CAP + 1`` rows and raises ``ValueError`` past
+    the cap rather than pull an unbounded table onto the driver."""
+    cap = TRANSITION_TABLE_CAP
+    table = _with_totals(transition_counts(events)).select(
+        "from_type",
+        "to_type",
+        "t",
+        decimal_ratio_round(F.col("n"), F.col("t"), 9).alias("p"),
+    )
+    rows = table.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(
+            f"transition table has at least {len(rows)} rows, more than "
+            f"TRANSITION_TABLE_CAP={cap}: the event-type column is not "
+            "a small categorical domain"
+        )
+    return rows
 
 
 def linear_interpolate_daily(

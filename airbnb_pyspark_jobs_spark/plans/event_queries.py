@@ -7,17 +7,26 @@ asserted in tests/test_streaming.py.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airbnb_pyspark_jobs_spark.operators.windows import (
+    collect_transition_table,
+    event_transitions,
     session_stats,
     sessionize,
+    transition_counts,
     tumbling_agg,
 )
 from airbnb_pyspark_jobs_spark.functions.numeric import (
+    decimal_py,
+    decimal_ratio_round_py,
     decimal_ratio_round_sql,
+    exact_mean_round_py,
     exact_mean_round_sql,
+    round_half_up_py,
 )
 from airbnb_pyspark_jobs_spark.plans.queries import query, _dec, _money
 from airbnb_pyspark_jobs_spark.sources.registry import load_table
@@ -1252,8 +1261,6 @@ def q130_time_decayed_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q131_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from airbnb_pyspark_jobs_spark.operators.windows import event_transitions
-
     events = load_table(spark, "events", sf_dir)
     return event_transitions(events)
 
@@ -3421,23 +3428,10 @@ def q223_daily_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q227_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    events = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = events.select(
-        F.col("event_type").alias("to_type"),
-        F.lag("event_type").over(w).alias("from_type"),
-    ).filter(F.col("from_type").isNotNull())
-    counts = ordered.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__n")
-    )
+    counts = transition_counts(load_table(spark, "events", sf_dir))
     g = counts.groupBy("from_type").agg(
-        F.sum("__n").cast("bigint").alias("n_from"),
-        F.sum(
-            F.col("__n")
-            * F.round(F.log2("__n") * F.lit(1e9)).cast("bigint")
-        )
+        F.sum("n").cast("bigint").alias("n_from"),
+        F.sum(F.col("n") * F.round(F.log2("n") * F.lit(1e9)).cast("bigint"))
         .cast("bigint")
         .alias("__s"),
         F.count(F.lit(1)).cast("bigint").alias("n_targets"),
@@ -4049,17 +4043,20 @@ def q243_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q245 Markov stationary distribution — the long-run answer to q131's
 # one-step transition matrix: where does a user session SPEND its time
 # if the observed dynamics run forever? Twelve synchronous power-
-# iteration steps of d·P from the uniform start, entirely in-plan:
-# the matrix is |types|² rows (bounded — broadcast on every step, no
-# driver collect), each step is one tiny join + groupBy. Determinism
-# discipline for an iterated float recurrence: transition probs and
-# every iterate are pinned to exact 9-dp doubles (decimal_ratio_round
-# / exact_mean_round over 12-dp-rounded term DECIMALs), so both
-# engines multiply and sum IDENTICAL doubles at every step and the
-# oracle replays the trajectory verbatim in unrolled CTEs (q192's
-# pattern). Types with no outgoing transitions would leak mass (the
-# standard absorbing-row caveat) — every type self-transitions in this
-# corpus; the invariant test asserts Σw ≈ 1.
+# iteration steps of d·P from the uniform start. The corpus-sized
+# stages (user-partitioned lag window, pair counts, 9-dp transition
+# probs) run in Spark; the matrix is bounded by the type domain (≤ k²
+# rows), so it is collected ONCE under a loud cap and the steps run on
+# the driver (collect_transition_table; SCALE_NOTES "Small-state fixed
+# points run on the driver"). Determinism discipline for an iterated
+# float recurrence: transition probs and every iterate are pinned to
+# exact 9-dp doubles (decimal_ratio_round / exact_mean_round over
+# 12-dp-rounded term DECIMALs, replayed by their functions.numeric
+# Python twins), so the driver and DuckDB multiply and sum IDENTICAL
+# doubles at every step and the oracle replays the trajectory verbatim
+# in unrolled CTEs (q192's pattern). Types with no outgoing transitions
+# would leak mass (the standard absorbing-row caveat) — every type
+# self-transitions in this corpus; the invariant test asserts Σw ≈ 1.
 # ---------------------------------------------------------------------------
 _Q245_ITERS = 12
 
@@ -4116,70 +4113,32 @@ def _q245_oracle() -> str:
     return "".join(parts)
 
 
+def _markov_term(p: float, w: float) -> Decimal:
+    """``CAST(round(p * w, 12) AS DECIMAL(28,12))`` — one step term of
+    the q245/q267 fixed points, as the oracle computes it."""
+    return decimal_py(round_half_up_py(p * w, 12), 12)
+
+
+def _markov_iterate(sums: dict) -> dict:
+    """Each exact DECIMAL(·,12) step sum back to a 9-dp double — the
+    oracle's ``exact_mean_round(·, 1, 9, sum_scale=12)``."""
+    return {k: exact_mean_round_py(v, 1, 9, sum_scale=12) for k, v in sums.items()}
+
+
 @query("q245_markov_stationary", oracle=_q245_oracle())
 def q245_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
-    from airbnb_pyspark_jobs_spark.functions.numeric import (
-        decimal_ratio_round,
-        exact_mean_round,
-    )
-
-    events = load_table(spark, "events", sf_dir)
-    w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = events.select(
-        F.col("event_type").alias("__to"),
-        F.lag("event_type").over(w_user).alias("__from"),
-    ).filter(F.col("__from").isNotNull())
-    counts = ordered.groupBy("__from", "__to").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__n")
-    )
-    totals = counts.groupBy("__from").agg(
-        F.sum("__n").cast("bigint").alias("__t")
-    )
-    m = owned_persist(
-        counts.join(F.broadcast(totals), "__from").select(
-            "__from",
-            "__to",
-            decimal_ratio_round(F.col("__n"), F.col("__t"), 9).alias("__p"),
-        )
-    )
-    k = m.agg(F.count_distinct("__from").cast("bigint").alias("__k"))
-    d = (
-        m.select("__from")
-        .distinct()
-        .crossJoin(F.broadcast(k))
-        .select(
-            F.col("__from").alias("__type"),
-            decimal_ratio_round(F.lit(1).cast("bigint"), F.col("__k"), 9).alias(
-                "__w"
-            ),
-        )
-    )
+    table = collect_transition_table(load_table(spark, "events", sf_dir))
+    totals = {f: t for f, _, t, _ in table}
+    d = dict.fromkeys(totals, decimal_ratio_round_py(1, len(totals), 9))
     for _ in range(_Q245_ITERS):
-        d = (
-            m.join(F.broadcast(d), m["__from"] == d["__type"])
-            .groupBy(F.col("__to").alias("__type"))
-            .agg(
-                exact_mean_round(
-                    F.sum(
-                        F.round(F.col("__p") * F.col("__w"), 12).cast(
-                            "decimal(28,12)"
-                        )
-                    ),
-                    F.lit(1).cast("bigint"),
-                    9,
-                    sum_scale=12,
-                ).alias("__w")
-            )
-        )
-    return d.join(
-        F.broadcast(totals), d["__type"] == totals["__from"]
-    ).select(
-        F.col("__type").alias("event_type"),
-        F.col("__t").alias("n_out_transitions"),
-        F.col("__w").alias("stationary_prob"),
+        sums = {}
+        for f, to, _, p in table:
+            if f in d:
+                sums[to] = sums.get(to, Decimal(0)) + _markov_term(p, d[f])
+        d = _markov_iterate(sums)
+    return spark.createDataFrame(
+        [(ty, totals[ty], w) for ty, w in d.items() if ty in totals],
+        "event_type string, n_out_transitions bigint, stationary_prob double",
     )
 
 
@@ -5129,9 +5088,10 @@ def q260_user_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is the probability the user's next-event chain hits `purchase`
 # before `error`? Absorbing-chain identity x = b + Q·x (b = one-step
 # P(→purchase), Q = transient→transient block), solved by 20
-# synchronous fixed-point steps fully in-plan (x₀ = 0, monotone
-# non-decreasing — the iterate is exact for chains that absorb within
-# 20 steps and a certified lower bound otherwise). Determinism: q245's
+# synchronous fixed-point steps (x₀ = 0, monotone non-decreasing — the
+# iterate is exact for chains that absorb within 20 steps and a
+# certified lower bound otherwise). The steps run on the driver over
+# the transition table collected once, as in q245. Determinism: q245's
 # discipline — P pinned to 9-dp, products rounded to 12 dp, DECIMAL
 # sums, integer round-half-away back to 9 dp each step; the oracle
 # replays all 20 steps in unrolled CTEs.
@@ -5210,75 +5170,25 @@ def _q267_oracle() -> str:
 
 @query("q267_absorption_prob", oracle=_q267_oracle())
 def q267_absorption_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
-    from airbnb_pyspark_jobs_spark.functions.numeric import (
-        decimal_ratio_round,
-        exact_mean_round,
-    )
-
-    events = load_table(spark, "events", sf_dir)
-    w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = events.select(
-        F.col("event_type").alias("__to"),
-        F.lag("event_type").over(w_user).alias("__from"),
-    ).filter(F.col("__from").isNotNull())
-    counts = ordered.groupBy("__from", "__to").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__n")
-    )
-    totals = counts.groupBy("__from").agg(
-        F.sum("__n").cast("bigint").alias("__t")
-    )
-    m = owned_persist(
-        counts.join(F.broadcast(totals), "__from")
-        .filter(~F.col("__from").isin(_Q267_WIN, _Q267_LOSE))
-        .select(
-            "__from",
-            "__to",
-            decimal_ratio_round(F.col("__n"), F.col("__t"), 9).alias("__p"),
-        )
-    )
-    bvec = owned_persist(
-        m.groupBy("__from").agg(
-            F.coalesce(
-                F.max(F.when(F.col("__to") == _Q267_WIN, F.col("__p"))),
-                F.lit(0.0),
-            ).alias("__b")
-        )
-    )
-    qm = m.filter(~F.col("__to").isin(_Q267_WIN, _Q267_LOSE))
-    x = bvec.select(
-        F.col("__from").alias("__type"), F.lit(0.0).alias("__w")
-    )
+    table = collect_transition_table(load_table(spark, "events", sf_dir))
+    totals = {f: t for f, _, t, _ in table}
+    absorbing = (_Q267_WIN, _Q267_LOSE)
+    m = [(f, to, p) for f, to, _, p in table if f not in absorbing]
+    b = {f: 0.0 for f, _, _ in m}
+    b.update({f: p for f, to, p in m if to == _Q267_WIN})
+    qm = [(f, to, p) for f, to, p in m if to not in absorbing]
+    x = dict.fromkeys(b, 0.0)
     for _ in range(_Q267_ITERS):
-        joined = bvec.join(
-            F.broadcast(qm), "__from", "left"
-        ).join(
-            F.broadcast(x), F.col("__to") == F.col("__type"), "left"
-        )
-        x = joined.groupBy(F.col("__from"), F.col("__b")).agg(
-            exact_mean_round(
-                F.coalesce(
-                    F.sum(
-                        F.round(F.col("__p") * F.col("__w"), 12).cast(
-                            "decimal(28,12)"
-                        )
-                    ),
-                    F.lit(0).cast("decimal(28,12)"),
-                )
-                + F.col("__b").cast("decimal(28,12)"),
-                F.lit(1).cast("bigint"),
-                9,
-                sum_scale=12,
-            ).alias("__w")
-        ).select(F.col("__from").alias("__type"), "__w")
-    return x.join(
-        F.broadcast(totals), x["__type"] == totals["__from"]
-    ).select(
-        F.col("__type").alias("event_type"),
-        F.col("__t").alias("n_out_transitions"),
-        F.col("__w").alias("p_purchase_before_error"),
+        # x_f = b_f + Σ_to Q[f, to]·x_to; a target with no outgoing row
+        # has no iterate (the oracle's NULL, which SUM skips)
+        sums = {f: decimal_py(bf, 12) for f, bf in b.items()}
+        for f, to, p in qm:
+            if to in x:
+                sums[f] += _markov_term(p, x[to])
+        x = _markov_iterate(sums)
+    return spark.createDataFrame(
+        [(ty, totals[ty], w) for ty, w in x.items()],
+        "event_type string, n_out_transitions bigint, p_purchase_before_error double",
     )
 
 

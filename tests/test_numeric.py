@@ -150,3 +150,88 @@ def test_q226_theil_decomposition_identity(spark):
     )
     assert abs(decomposed - t_naive) < 1e-3
     assert abs(sum(r.rev_share for r in rows) - 1.0) < 1e-4
+
+
+def _halfway_products(n: int = 24) -> list[float]:
+    """Products of two 9-dp grid doubles (``q / 1e9``, as
+    decimal_ratio_round emits them) whose shortest repr ends in a 5 at
+    the 13th decimal — exact HALF_UP ties for ``round(·, 12)``."""
+    out = []
+    for i in range(100000001, 100002001, 2):
+        for j in (500000, 1500000, 2500000, 3500000, 4500000):
+            x = (i / 1e9) * (j / 1e9)
+            r = repr(x)
+            if r.endswith("5") and Decimal(r).as_tuple().exponent == -13:
+                out.append(x)
+    return out[:n]
+
+
+def test_python_twins_match_spark_expressions(spark):
+    """Each functions.numeric Python twin against its Spark expression,
+    all evaluated in one DataFrame pass: round / DECIMAL cast of doubles
+    on exact 12-dp ties, exact_mean_round of DECIMAL sums (negative, zero,
+    a negative sum that rounds to -0.0) and decimal_ratio_round with
+    negative numerators."""
+    import math
+
+    from airbnb_pyspark_jobs_spark.functions.numeric import (
+        decimal_py,
+        decimal_ratio_round,
+        decimal_ratio_round_py,
+        exact_mean_round_py,
+        round_half_up_py,
+    )
+
+    xs = _halfway_products()
+    step = Decimal(1).scaleb(-12)
+    # the case set has teeth: for some ties the full binary expansion
+    # sits below the .5 boundary, so a Decimal(x)-based twin rounds down
+    assert any(
+        Decimal(x).quantize(step, ROUND_HALF_UP)
+        != Decimal(repr(x)).quantize(step, ROUND_HALF_UP)
+        for x in xs
+    )
+    xs += [-x for x in xs[:6]] + [0.0, 0.1 * 3, 1.0 / 3]
+    sums = [
+        ("0", 1), ("0.000000000500", 1), ("-0.000000000500", 1),
+        ("-0.000000000499", 1), ("-0.000000000001", 3), ("0.999999999500", 1),
+        ("-3.141592653500", 1), ("12.345678901234", 7), ("-12.345678901234", 7),
+    ]
+    ratios = [
+        (1, 3), (-1, 3), (-2, 3), (-1, 2_000_000_000), (-1, 2_000_000_001),
+        (0, 5), (7, 7), (-123456789, 1000), (123456789012345, 987654321),
+    ]
+    rows = (
+        [(x, None, None, None, None) for x in xs]
+        + [(None, s, n, None, None) for s, n in sums]
+        + [(None, None, None, a, b) for a, b in ratios]
+    )
+    df = spark.createDataFrame(
+        rows, "x double, s string, n bigint, num bigint, den bigint"
+    )
+    got = df.select(
+        "x", "s", "n", "num", "den",
+        F.round("x", 12).alias("r12"),
+        F.col("x").cast("decimal(28,12)").alias("d12"),
+        F.round("x", 12).cast("decimal(28,12)").alias("t12"),
+        exact_mean_round(
+            F.col("s").cast("decimal(28,12)"), F.col("n"), 9, sum_scale=12
+        ).alias("m9"),
+        decimal_ratio_round(F.col("num"), F.col("den"), 9).alias("q9"),
+    ).collect()
+    assert len(got) == len(rows)
+
+    def signed(v):
+        return v, math.copysign(1.0, v)
+
+    for r in got:
+        if r.x is not None:
+            assert r.r12 == round_half_up_py(r.x, 12), r
+            assert r.d12 == decimal_py(r.x, 12), r
+            assert r.t12 == decimal_py(round_half_up_py(r.x, 12), 12), r
+        elif r.s is not None:
+            want = exact_mean_round_py(Decimal(r.s), r.n, 9, sum_scale=12)
+            assert signed(r.m9) == signed(want), r
+        else:
+            want = decimal_ratio_round_py(r.num, r.den, 9)
+            assert signed(r.q9) == signed(want), r

@@ -763,3 +763,23 @@ def test_q38_postings_digest_is_two_level_tree(spark):
         if "collect_list(__bdig" in line:
             saw_bucket_digest = True
     assert saw_bucketed and saw_bucket_digest, plan[:2000]
+
+
+@pytest.mark.parametrize(
+    "name", ["q245_markov_stationary", "q267_absorption_prob"]
+)
+def test_markov_fixed_points_run_a_bounded_number_of_jobs(spark, name):
+    """The Markov fixed points collect their transition table once and
+    iterate on the driver: build through ``toPandas()`` stays within 10
+    Spark jobs, however many steps they take. An in-plan unrolled loop
+    nests one broadcast join per step and runs 50-75 jobs here."""
+    sc = spark.sparkContext
+    group = f"job-count-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        QUERIES[name](spark, SF_DIR).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 10, (name, len(jobs))

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from airbnb_pyspark_jobs_spark.operators.windows import max_concurrency
@@ -228,3 +229,23 @@ def test_grouped_cusum_all_negative_stays_zero(spark):
 
     vals = [r.cusum_scaled for r in grouped_cusum(df, ["k"], "t", "y").collect()]
     assert vals == [0, 0, 0, 0, 0]
+
+
+def test_collect_transition_table_raises_past_cap(spark, monkeypatch):
+    from airbnb_pyspark_jobs_spark.operators import windows
+
+    t0 = dt.datetime(2024, 1, 1)
+    # one user: a -> b -> a -> c  => pairs a->b, b->a, a->c (3 table rows)
+    rows = [(i, t0 + dt.timedelta(minutes=i), 1, et) for i, et in enumerate("abac")]
+    df = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string"
+    )
+    monkeypatch.setattr(windows, "TRANSITION_TABLE_CAP", 2)
+    with pytest.raises(ValueError, match=r"at least 3 rows.*TRANSITION_TABLE_CAP=2"):
+        windows.collect_transition_table(df)
+    monkeypatch.setattr(windows, "TRANSITION_TABLE_CAP", 3)
+    assert sorted(windows.collect_transition_table(df)) == [
+        ("a", "b", 2, 0.5),
+        ("a", "c", 2, 0.5),
+        ("b", "a", 1, 1.0),
+    ]
