@@ -1,8 +1,8 @@
 """Document deduplication operators for LLM-data pipelines.
 
-Four families, all expressed as DataFrame compositions (no UDFs, no
-driver-side loops), designed so the whole pipeline — including MinHash —
-is reproducible in the DuckDB oracle (md5-based hashing):
+Four families, all expressed as DataFrame compositions (no UDFs),
+designed so the whole pipeline — including MinHash — is reproducible in
+the DuckDB oracle (md5-based hashing):
 
 - :func:`exact_dedup_keepers` — hash-groupBy exact dedup on a
   normalized-text fingerprint.
@@ -25,13 +25,22 @@ Scale notes (100 TB corpora):
 - signatures are computed in ONE groupBy over exploded shingles (k min()
   aggregates in a single shuffle), not k passes;
 - all hashes are md5-derived: deterministic across engines, runs and
-  partitionings.
+  partitionings;
+- the two fixed points over the near-duplicate graph,
+  :func:`dedup_components` and :func:`pagerank`, are the only loops.
+  Pair generation and the edge list stay in Spark; the edge list is
+  collected once, and when it fits :data:`DRIVER_GRAPH_CAP` rows the
+  loop runs on the driver (bit-identical results, no Spark job per
+  round). Past the cap — the 100 TB dup graph — the Spark loop runs.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from airbnb_pyspark_jobs_spark.functions.text import (
     fingerprint,
@@ -459,6 +468,86 @@ def choose_minhash_config(
     return minhash_banding_params(threshold, target_recall, num_hashes=max_hashes)
 
 
+# Dup graphs whose edge list (pairs in both orientations) has at most
+# this many rows run their fixed point on the driver; bigger ones run
+# the Spark loop. The path depends only on the observed edge count.
+# At this size the driver PageRank replay and the Spark loop take about
+# the same time (4 cores); driver memory at the cap is measured in
+# SCALE_NOTES "Small-state fixed points run on the driver".
+DRIVER_GRAPH_CAP = 10_000
+
+# PageRank's Spark loop truncates the rank lineage every this many
+# iterations (SCALE_NOTES "In-loop lineage truncation").
+PAGERANK_CHECKPOINT_EVERY = 8
+
+
+def _both_orientations(df: DataFrame, x: str, y: str) -> DataFrame:
+    """``a, b``: every ``(x, y)`` row of ``df`` in both orientations
+    (UNION ALL: duplicates and self-pairs stay twice), in ONE pass over
+    ``df`` — a union would reference the caller's pair pipeline (a
+    whole similarity join) twice."""
+    e = F.explode(
+        F.array(
+            F.struct(F.col(x).alias("a"), F.col(y).alias("b")),
+            F.struct(F.col(y).alias("a"), F.col(x).alias("b")),
+        )
+    ).alias("__e")
+    return df.select(e).select("__e.a", "__e.b")
+
+
+def _collect_graph(edges: DataFrame) -> tuple[DataFrame, list | None]:
+    """Persist an edge list and collect it when it fits
+    :data:`DRIVER_GRAPH_CAP`: ``(edges, rows)`` with the cache already
+    released, else ``(edges, None)`` with the cache kept for the Spark
+    loop — which then reads the edges without re-running the pair
+    pipeline the bounded collect just ran. Planned with constraint
+    propagation off, as ``flat_checkpoint`` does: the closure over a
+    pair pipeline's equated columns can hang the optimizer."""
+    from airbnb_pyspark_jobs_spark.caching import (
+        collect_bounded,
+        constraint_propagation_off,
+        owned_persist,
+    )
+
+    with constraint_propagation_off(edges.sparkSession):
+        edges = owned_persist(edges)
+        rows = collect_bounded(edges, DRIVER_GRAPH_CAP)
+    if rows is not None:
+        edges.unpersist()
+    return edges, rows
+
+
+def _min_id_labels(rows: list) -> list[tuple]:
+    """``(node, smallest id in its component)`` by union-find over the
+    directed edge rows ``(a, b)`` of :func:`dedup_components`, whose
+    ``b`` is always a doc. The smaller root always wins a union, so a
+    root is its component's minimum — the pointer-jumping fixed point.
+    Python's ``<`` orders ints as Spark does and strings by code point,
+    which is Spark's UTF-8 byte order. An ``a`` outside docs never
+    appears as a ``b`` (its in-edges were dropped), and its edges are
+    skipped: they were inert in the Spark loop too."""
+    in_docs = {b for _, b in rows}
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while x != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in rows:
+        if a not in in_docs:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(v, find(v)) for v in parent]
+
+
 def dedup_components(
     docs: DataFrame,
     pairs: DataFrame,
@@ -472,18 +561,29 @@ def dedup_components(
     keep ``doc_id == component_id``, drop the rest — without it,
     transitive near-dup chains (A~B, B~C) keep redundant docs.
 
-    Iterative min-label propagation WITH pointer jumping: each round
-    every node takes the min of its own label, its neighbors' labels,
-    and its label's label (path halving). Neighbor-min alone needs
-    graph-DIAMETER rounds — a 1000-hop chain exhausts any sane
-    iteration cap; the label[label[v]] hop doubles propagation distance
-    per round, so convergence is O(log diameter) (measured: a 60-node
-    path converges in 7 rounds vs 20+ without jumping). Valid because
-    labels only decrease and a node's label is always inside its
-    component. Each round is two joins + one groupBy on the node key,
-    with an early-exit convergence ACTION (a count per round — this is
-    an iterative algorithm, bounded by ``max_iterations``, not a lazy
-    plan).
+    The corpus-sized stages run in Spark: the caller's pair pipeline,
+    the deduplicated edge list in both orientations, and the semi-join
+    that drops edges pointing OUTSIDE docs. The edge list is then
+    persisted and collected once under :data:`DRIVER_GRAPH_CAP`:
+
+    - within the cap (q58's dup graph: 50–512 rows at sf0.001–sf0.1),
+      a driver union-find (:func:`_min_id_labels`) computes the labels
+      and they come back through ``createDataFrame`` — no Spark job per
+      round;
+    - past the cap, the Spark loop below runs over the same edges. It
+      reaches the same fixed point within ``max_iterations`` (the
+      driver path ignores it: it has no rounds).
+
+    Spark loop: iterative min-label propagation WITH pointer jumping:
+    each round every node takes the min of its own label, its
+    neighbors' labels, and its label's label (path halving).
+    Neighbor-min alone needs graph-DIAMETER rounds — a 1000-hop chain
+    exhausts any sane iteration cap; the label[label[v]] hop doubles
+    propagation distance per round, so convergence is O(log diameter)
+    (measured: a 60-node path converges in 7 rounds vs 20+ without
+    jumping). Valid because labels only decrease and a node's label is
+    always inside its component. Each round is two joins + one groupBy
+    on the node key, with an early-exit changed-label count per round.
 
     Lineage: the edge list and each round's labels are
     ``localCheckpoint(eager=True)``, not merely persisted — persist
@@ -491,44 +591,53 @@ def dedup_components(
     Catalyst re-analyzes a tree that grows linearly and the JVM
     eventually overflows its stack just printing it (measured locally:
     a 60-node path graph at 20 iterations crashes with persist-only
-    lineage; checkpointed it runs in ~4 s). On a fault-tolerant cluster
-    run, swap localCheckpoint for ``checkpoint()`` with a reliable
-    checkpoint dir — same truncation, executor-loss safe.
+    lineage; checkpointed it runs in ~4 s). Each superseded label
+    checkpoint is freed as the loop advances, the edge checkpoint when
+    it ends, and the final labels by the ``release_owned_caches``
+    sweep. On a fault-tolerant cluster run, swap localCheckpoint for
+    ``checkpoint()`` with a reliable checkpoint dir — same truncation,
+    executor-loss safe.
 
-    r12 shape (guide §2.3/§2.4 — shuffle the dup graph, not the
-    corpus): the loop runs over EDGE ENDPOINTS only. Isolated docs
-    (no incident pair) keep ``component_id = doc_id`` by definition —
-    the old corpus-wide labels frame re-joined and re-checkpointed
-    every document every round; now each round touches only the
-    dup-graph's nodes (≪ corpus at 100 TB) and the corpus attaches the
-    converged labels ONCE at the end (left join + coalesce). Self-loop
-    rows fold the "keep own label" branch into the neighbor min (one
-    join per round instead of two); convergence is a changed-label
-    count over the two checkpointed label frames (type-agnostic — ids
-    may be strings, q246). Identical output to the corpus-wide loop:
-    edges with an endpoint missing from ``docs`` were inert before
-    (their neighbor-min rows were dropped by the labels join) and stay
-    inert (the ``b``-side semi-join below); everything else is the
-    same min-label/pointer-jump fixpoint.
+    Both paths work over EDGE ENDPOINTS only (guide §2.3/§2.4 — shuffle
+    the dup graph, not the corpus): isolated docs keep ``component_id
+    = doc_id`` by definition, and the corpus attaches the labels ONCE
+    at the end (left join + coalesce). Self-loop rows fold the "keep
+    own label" branch into the neighbor min (one join per round); the
+    convergence count compares the two checkpointed label frames
+    (type-agnostic — ids may be strings, q246). Edges with an endpoint
+    missing from ``docs`` stay inert.
     """
-    from airbnb_pyspark_jobs_spark.caching import flat_checkpoint
-
     base = docs.select(F.col(id_col).alias("node"))
-    # materialize the caller's pair pipeline ONCE — the undirected union
-    # below references it twice, and pair generators are whole
-    # similarity joins (q146's phash pass measured ~4 s per evaluation
-    # at sf0.001)
-    p = flat_checkpoint(pairs.select("doc_id_a", "doc_id_b"))
-    edges = flat_checkpoint(
-        p.select(F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b"))
-        .unionByName(
-            p.select(F.col("doc_id_b").alias("a"), F.col("doc_id_a").alias("b"))
-        )
+    edges, rows = _collect_graph(
+        _both_orientations(pairs, "doc_id_a", "doc_id_b")
         .distinct()
-        # drop edges pointing OUTSIDE docs (inert in the old corpus-wide
-        # loop; must stay inert now that endpoints seed the label set)
         .join(base.withColumnRenamed("node", "b"), "b", "left_semi")
     )
+    if rows is not None:
+        t = edges.schema["a"].dataType
+        labels = edges.sparkSession.createDataFrame(
+            _min_id_labels(rows),
+            StructType([StructField("node", t), StructField("label", t)]),
+        )
+    else:
+        labels = _spark_labels(edges, max_iterations)
+    return base.distinct().join(labels, "node", "left").select(
+        F.col("node").alias(id_col),
+        F.coalesce("label", "node").alias("component_id"),
+    )
+
+
+def _spark_labels(edges: DataFrame, max_iterations: int) -> DataFrame:
+    """``node, label`` of :func:`dedup_components`' Spark loop over the
+    persisted edge list, which it checkpoints and releases."""
+    from airbnb_pyspark_jobs_spark.caching import (
+        flat_checkpoint,
+        owned_checkpoint,
+        release_checkpoint,
+    )
+
+    persisted, edges = edges, flat_checkpoint(edges)
+    persisted.unpersist()
     nodes = edges.select(F.col("a").alias("node")).distinct()
     # self-loops: min over N(v) ∪ {v} ≡ least(own, neighbor-min)
     adj = edges.unionByName(
@@ -560,13 +669,12 @@ def dedup_components(
             .filter(F.col("label") != F.col("__old"))
             .count()
         )
+        release_checkpoint(labels)
         labels = new_labels
         if changed == 0:
             break
-    return base.distinct().join(labels, "node", "left").select(
-        F.col("node").alias(id_col),
-        F.coalesce("label", "node").alias("component_id"),
-    )
+    release_checkpoint(edges)
+    return owned_checkpoint(labels)
 
 
 def simhash_pairs(
@@ -1323,6 +1431,47 @@ def source_overlap_matrix(
     )
 
 
+def _pagerank_py(
+    rows: list, iters: int, damping: float, r_digits: int
+) -> list[tuple]:
+    """``(node, deg, rank)`` of :func:`pagerank`'s Spark loop, on the
+    driver over the collected UNION ALL edge rows ``(a, b)``: the same
+    double expressions, rounded through the ``functions/numeric`` twins
+    of Spark's ``round`` and DECIMAL cast, with exact ``Decimal`` sums —
+    so every iterate is bit-identical to the plan's."""
+    from decimal import Decimal
+
+    from airbnb_pyspark_jobs_spark.functions.numeric import (
+        decimal_py,
+        round_half_up_py,
+    )
+
+    deg = Counter(a for a, _ in rows)
+    if not deg:
+        return []
+    n = float(len(deg))
+    teleport = round_half_up_py((1.0 - float(damping)) / n, r_digits)
+    r0 = decimal_py(round_half_up_py(1.0 / n, r_digits), r_digits)
+    ranks = dict.fromkeys(deg, r0)
+    for _ in range(iters):
+        # one contribution per source node: round(r / deg) as DECIMAL
+        contrib = {
+            a: decimal_py(round_half_up_py(float(ranks[a]) / float(d), r_digits), r_digits)
+            for a, d in deg.items()
+        }
+        sums = dict.fromkeys(deg, Decimal(0))
+        for a, b in rows:
+            sums[b] += contrib[a]
+        ranks = {
+            v: decimal_py(
+                round_half_up_py(teleport + float(damping) * float(sums[v]), r_digits),
+                r_digits,
+            )
+            for v in deg
+        }
+    return [(v, d, float(ranks[v])) for v, d in deg.items()]
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src",
@@ -1330,7 +1479,6 @@ def pagerank(
     iters: int = 5,
     damping: float = 0.85,
     r_digits: int = 9,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Deterministic PageRank over an UNDIRECTED edge list (each edge
     contributes both directions) — duplication-centrality ranking for
@@ -1345,17 +1493,34 @@ def pagerank(
     so the whole trajectory is bitwise reproducible cross-engine (the
     unrolled-CTE oracle replays it exactly, the k-means recipe).
 
-    Returns ``node, degree, rank``. Scale: each iteration is one
-    equi-join on the node key + one aggregation — the classic Pregel
-    shape. The in-loop ``ranks`` frame is localCheckpoint'ed every
-    ``checkpoint_every`` iterations (the connected-components lineage
-    discipline): each round's plan nests the previous round's, so
-    without truncation Catalyst re-analyzes an exponentially-growing
-    plan for ``iters`` ≫ 5 (measured: iters=25 is O(iters) with the
-    checkpoint, runaway analysis without — SCALE_NOTES)."""
-    und = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    )
+    Returns ``node, deg, rank``. The edge list in both orientations
+    (UNION ALL: a duplicate pair or a self-pair counts twice in
+    ``deg``) is built in Spark, persisted and collected once under
+    :data:`DRIVER_GRAPH_CAP`. Within the cap the iterations run on the
+    driver (:func:`_pagerank_py`, the same arithmetic through the
+    ``functions/numeric`` twins) and the result comes back through
+    ``createDataFrame``. Past the cap the Spark loop runs: each
+    iteration is one equi-join on the node key + one aggregation — the
+    classic Pregel shape — and the in-loop ``ranks`` frame is
+    localCheckpoint'ed every :data:`PAGERANK_CHECKPOINT_EVERY`
+    iterations (the connected-components lineage discipline): each
+    round's plan nests the previous round's, so without truncation
+    Catalyst re-analyzes an exponentially-growing plan for ``iters`` ≫
+    5 (measured: iters=25 is O(iters) with the checkpoint, runaway
+    analysis without — SCALE_NOTES). The result reads every checkpoint
+    the loop makes; the ``release_owned_caches`` sweep frees them."""
+    und, rows = _collect_graph(_both_orientations(edges, src_col, dst_col))
+    if rows is not None:
+        return und.sparkSession.createDataFrame(
+            _pagerank_py(rows, iters, damping, r_digits),
+            StructType(
+                [
+                    StructField("node", und.schema["a"].dataType),
+                    StructField("deg", LongType()),
+                    StructField("rank", DoubleType()),
+                ]
+            ),
+        )
     # every iteration re-references the edge list and degrees, and the
     # LOGICAL plan would duplicate the upstream edge computation (often
     # a whole similarity join) once per reference — caching alone does
@@ -1364,12 +1529,15 @@ def pagerank(
     # discipline; measured 74 s -> 8.7 s on the q138 shape at sf0.1;
     # the residual is the 5 small per-iteration shuffles + the edge
     # computation itself).
-    und = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint()
-    deg = und.groupBy("a").agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    ).localCheckpoint()
+    from airbnb_pyspark_jobs_spark.caching import owned_checkpoint
+
+    persisted, und = und, owned_checkpoint(und.localCheckpoint())
+    persisted.unpersist()
+    deg = owned_checkpoint(
+        und.groupBy("a").agg(
+            F.count(F.lit(1)).cast("bigint").alias("deg")
+        ).localCheckpoint()
+    )
     nodes = deg.select(F.col("a").alias("node"), "deg")
     n_nodes = nodes.count()  # bounded planning action: one scalar
     # round IN-PLAN (SQL half-away semantics, same as the oracle's
@@ -1383,8 +1551,8 @@ def pagerank(
         F.round(F.lit(1.0) / F.lit(float(n_nodes)), r_digits).cast(dec).alias("r"),
     )
     for it in range(iters):
-        if checkpoint_every > 0 and it > 0 and it % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint()
+        if it > 0 and it % PAGERANK_CHECKPOINT_EVERY == 0:
+            ranks = owned_checkpoint(ranks.localCheckpoint())
         contrib = (
             und.join(ranks.withColumnRenamed("node", "a"), "a")
             .join(deg, "a")

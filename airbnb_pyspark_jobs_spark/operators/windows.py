@@ -307,9 +307,12 @@ def collect_transition_table(events: DataFrame) -> list[tuple[str, str, int, flo
     collected to the driver once, for fixed-point loops whose state is
     a vector over event types (q245, q267). The corpus-sized stages —
     the lag window, the pair counts and the 9-dp ``p =
-    decimal_ratio_round(n, t, 9)`` — run in Spark. The collect reads at most
-    ``TRANSITION_TABLE_CAP + 1`` rows and raises ``ValueError`` past
-    the cap rather than pull an unbounded table onto the driver."""
+    decimal_ratio_round(n, t, 9)`` — run in Spark. The collect
+    (``caching.collect_bounded``) reads at most ``TRANSITION_TABLE_CAP
+    + 1`` rows and raises ``ValueError`` past the cap rather than pull
+    an unbounded table onto the driver."""
+    from airbnb_pyspark_jobs_spark.caching import collect_bounded
+
     cap = TRANSITION_TABLE_CAP
     table = _with_totals(transition_counts(events)).select(
         "from_type",
@@ -317,10 +320,10 @@ def collect_transition_table(events: DataFrame) -> list[tuple[str, str, int, flo
         "t",
         decimal_ratio_round(F.col("n"), F.col("t"), 9).alias("p"),
     )
-    rows = table.limit(cap + 1).collect()
-    if len(rows) > cap:
+    rows = collect_bounded(table, cap)
+    if rows is None:
         raise ValueError(
-            f"transition table has at least {len(rows)} rows, more than "
+            f"transition table has at least {cap + 1} rows, more than "
             f"TRANSITION_TABLE_CAP={cap}: the event-type column is not "
             "a small categorical domain"
         )

@@ -4,6 +4,7 @@ that sub-n docs produce NO shingles."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from airbnb_pyspark_jobs_spark.operators import dedupe as DD
@@ -534,6 +535,74 @@ def test_pagerank_deterministic_across_runs(spark):
     a = sorted(map(tuple, pagerank(edges, "src", "dst").collect()))
     b = sorted(map(tuple, pagerank(edges, "src", "dst").collect()))
     assert a == b
+
+
+def test_pagerank_driver_and_spark_paths_agree(spark, monkeypatch):
+    """A duplicate pair and a self-pair count twice in ``deg`` (UNION
+    ALL orientation) on both paths, and 11 iterations run the Spark
+    loop's rank checkpoint: the driver replay must equal it bit for
+    bit, and the release sweep frees every checkpoint the loop made."""
+    from airbnb_pyspark_jobs_spark.caching import release_owned_caches
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (3, 3), (3, 4), (4, 5), (5, 1), (6, 7)],
+        "src long, dst long",
+    )
+
+    def run():
+        return sorted(map(tuple, DD.pagerank(edges, "src", "dst", iters=11).collect()))
+
+    driver = run()
+    monkeypatch.setattr(DD, "DRIVER_GRAPH_CAP", 0)
+    jsc = spark.sparkContext._jsc
+    release_owned_caches()
+    before = set(jsc.getPersistentRDDs().keys())
+    assert run() == driver
+    release_owned_caches()
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    deg = {node: d for node, d, _ in driver}
+    assert deg == {1: 4, 2: 3, 3: 3, 4: 2, 5: 2, 6: 1, 7: 1}
+
+
+def test_dedup_components_spark_path_releases_its_checkpoints(spark, monkeypatch):
+    """Past the cap the Spark loop frees each superseded label
+    checkpoint and the edge checkpoint itself, and hands the final
+    labels to the ``release_owned_caches`` sweep: afterwards no RDD the
+    call persisted is left."""
+    from airbnb_pyspark_jobs_spark.caching import release_owned_caches
+
+    monkeypatch.setattr(DD, "DRIVER_GRAPH_CAP", 0)
+    jsc = spark.sparkContext._jsc
+    release_owned_caches()
+    before = set(jsc.getPersistentRDDs().keys())
+    docs = spark.range(20).select(F.col("id").alias("doc_id"))
+    pairs = spark.range(15).select(
+        F.col("id").alias("doc_id_a"), (F.col("id") + 1).alias("doc_id_b")
+    )
+    comp = DD.dedup_components(docs, pairs).collect()
+    assert {r.component_id for r in comp if r.doc_id <= 15} == {0}
+    # only the final labels are still held while the result is live
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) == 1
+    release_owned_caches()
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_dedup_components_collapse_transitive_chains,
+        test_dedup_components_string_ids_and_foreign_endpoints,
+        test_dedup_components_deep_chain_converges_in_log_rounds,
+        test_pagerank_star_center_dominates,
+        test_pagerank_deterministic_across_runs,
+    ],
+    ids=lambda f: f.__name__.removeprefix("test_"),
+)
+def test_graph_cases_on_spark_path(spark, monkeypatch, case):
+    """The graph operators' cases above run on the driver path (their
+    graphs fit the cap); a cap of 0 sends them through the Spark loop."""
+    monkeypatch.setattr(DD, "DRIVER_GRAPH_CAP", 0)
+    case(spark)
 
 
 def test_soft_jaccard_downweights_boilerplate(spark):
