@@ -1,27 +1,31 @@
-"""Query-scoped cache ownership for persisted intermediates.
+"""Query-scoped ownership of persisted intermediates and checkpoints.
 
 Operators persist intermediates that feed multiple downstream branches
-(shingle tables, candidate pairs, residuals). Those DataFrames must stay
-cached until the CALLER materializes the query result — so the operator
-cannot unpersist before returning — but in a long-lived session running
-many queries back-to-back (the round driver's loop, ``bench.py``),
-never-released caches accumulate in the block manager until eviction
-pressure sets in.
+(shingle tables, candidate pairs, residuals), and cut the lineage of
+fixed-point loops and multi-consumer stream batches with
+checkpoints. Both must outlive the operator — the CALLER materializes
+the query result — but in a long-lived session running many queries
+back-to-back (the round driver's loop, ``bench.py``, a stream's
+micro-batches), never-released blocks accumulate in the block manager
+until eviction pressure sets in.
 
 The contract here makes the lifetime explicit and bounded:
 
 - operators/plans register every internally-persisted DataFrame via
   :func:`owned_persist` instead of calling ``.persist()`` directly;
+- every lineage cut goes through :func:`checkpoint` — the package's
+  one ``localCheckpoint`` call — which registers the result the same
+  way;
 - the ``@query`` decorator releases ALL registered caches at the START
   of the next query invocation (the previous query's result has been
   materialized by then) — so the driver's loop holds at most one
-  query's intermediates at a time;
+  query's intermediates at a time; stream batches release theirs at
+  batch end;
 - callers composing operators directly call
   :func:`release_owned_caches` themselves once results are
   materialized (tests assert the block manager returns to baseline);
-- a ``localCheckpoint`` a result still reads is registered the same
-  way (:func:`owned_checkpoint`); one nothing reads any more is freed
-  on the spot (:func:`release_checkpoint`).
+- a loop frees a checkpoint nothing reads any more on the spot
+  (:func:`release_checkpoint`), so its live blocks stay O(1) rounds.
 
 At cluster scale the same discipline applies: executor storage memory
 is a shared resource, and ``MEMORY_AND_DISK`` eviction saves you from
@@ -59,18 +63,11 @@ def owned_persist(
 
 
 def release_checkpoint(df: DataFrame) -> None:
-    """Free the blocks of a ``localCheckpoint``'ed frame now
-    (non-blocking). ``DataFrame.unpersist`` does not: the blocks belong
-    to the RDD under the frame's ``LogicalRDD``, not to the cache
-    manager."""
+    """Free the blocks of a :func:`checkpoint`'ed frame now
+    (non-blocking), once nothing reads it any more.
+    ``DataFrame.unpersist`` does not: the blocks belong to the RDD
+    under the frame's ``LogicalRDD``, not to the cache manager."""
     df._jdf.queryExecution().logical().rdd().unpersist(False)
-
-
-def owned_checkpoint(df: DataFrame) -> DataFrame:
-    """Register a ``localCheckpoint``'ed frame for the next
-    :func:`release_owned_caches` sweep. Returns the frame."""
-    _OWNED.append(lambda: release_checkpoint(df))
-    return df
 
 
 def collect_bounded(df: DataFrame, cap: int) -> list[Row] | None:
@@ -119,17 +116,25 @@ def constraint_propagation_off(spark: SparkSession) -> Iterator[None]:
                 spark.conf.set(key, prev)
 
 
-def flat_checkpoint(df: DataFrame) -> DataFrame:
-    """``localCheckpoint(eager=True)`` with constraint propagation
-    disabled around the call (:func:`constraint_propagation_off`)."""
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage: ``localCheckpoint(eager=True)`` planned
+    with constraint propagation off (:func:`constraint_propagation_off`),
+    registered for the next :func:`release_owned_caches` sweep. The
+    package's only ``localCheckpoint`` call; never call it inside a
+    :func:`constraint_propagation_off` block (its lock is not
+    reentrant)."""
     with constraint_propagation_off(df.sparkSession):
-        return df.localCheckpoint(eager=True)
+        df = df.localCheckpoint(eager=True)
+    _OWNED.append(lambda: release_checkpoint(df))
+    return df
 
 
 def release_owned_caches() -> int:
     """Unpersist every registered intermediate (non-blocking); returns
-    how many were released. Safe to call at any time — a released cache
-    only costs recomputation if its query is re-materialized later."""
+    how many were released. Call it once the results that read them are
+    materialized: a released cache only costs recomputation if its
+    query is re-materialized later, but a frame that reads a released
+    checkpoint can no longer be computed."""
     n = 0
     while _OWNED:
         try:

@@ -36,9 +36,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from airbnb_pyspark_jobs_spark.caching import (
+    checkpoint,
+    owned_persist,
+    release_checkpoint,
+)
 from airbnb_pyspark_jobs_spark.functions.text import tokens
 
 END = "</w>"
+
+#: :func:`bpe_segment_words` checkpoints its merge replay every this
+#: many merges
+SEGMENT_CHECKPOINT_EVERY = 64
 
 
 def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -117,17 +126,18 @@ def bpe_learn_merges(
     ``[(merge_idx, sym_a, sym_b, merged, pair_count)]``.
 
     Lineage/memory discipline (the dedup_components lesson): each
-    iteration's symbol table is ``localCheckpoint(eager=True)``, NOT
-    persisted — persist caches data but the replace-chain plan still
-    nests merge over merge, so Catalyst re-analyzes a linearly growing
-    tree and real vocab sizes (10k-32k merges) die in analysis;
-    checkpointing truncates the plan to a scan of the materialized
-    vocab-sized table each round (round 2 additionally leaked every
-    superseded persist — checkpoint blocks are instead freed by the
-    ContextCleaner when the old frame is dropped). The materialization
-    this forces is work `_top_pair`'s aggregation does anyway. On a
-    fault-tolerant cluster swap for ``checkpoint()`` with a reliable
-    dir (executor-loss safe). Measured: the sf0.01 corpus merges to
+    iteration's symbol table is cut with :func:`caching.checkpoint`,
+    NOT persisted — persist caches data but the replace-chain plan
+    still nests merge over merge, so Catalyst re-analyzes a linearly
+    growing tree and real vocab sizes (10k-32k merges) die in
+    analysis; checkpointing truncates the plan to a scan of the
+    materialized vocab-sized table each round. Each superseded table
+    is freed as the loop advances (:func:`caching.release_checkpoint`)
+    and the last one by the ``release_owned_caches`` sweep, so one
+    merge's blocks are live at a time. The materialization this forces
+    is work `_top_pair`'s aggregation does anyway. On a fault-tolerant
+    cluster swap for ``DataFrame.checkpoint()`` with a reliable dir
+    (executor-loss safe). Measured: the sf0.01 corpus merges to
     vocabulary exhaustion (106 merges — every word one symbol) in
     ~22 s at a FLAT ~0.2 s/merge, plan depth constant; round 2's
     persist-chain version grew per-merge cost with the nesting depth
@@ -139,10 +149,8 @@ def bpe_learn_merges(
     # shuffle.partitions-many near-empty tasks x 3 jobs (measured 3.3
     # -> 0.6 s/merge at 8k types, local[32]); size sym_partitions ~
     # |vocab|/250k rows on a cluster.
-    sym = (
-        _initial_symbols(word_frequencies(docs, text_col))
-        .coalesce(sym_partitions)
-        .localCheckpoint(eager=True)
+    sym = checkpoint(
+        _initial_symbols(word_frequencies(docs, text_col)).coalesce(sym_partitions)
     )
     merges: list[tuple[int, str, str, str, int]] = []
     for i in range(n_merges):
@@ -151,9 +159,10 @@ def bpe_learn_merges(
             break
         x, y, cnt = top
         merges.append((i, x, y, x + y, cnt))
-        sym = sym.select(
-            "freq", apply_merge(F.col("s"), x, y, replace_passes).alias("s")
-        ).localCheckpoint(eager=True)
+        old, sym = sym, checkpoint(
+            sym.select("freq", apply_merge(F.col("s"), x, y, replace_passes).alias("s"))
+        )
+        release_checkpoint(old)
         if progress is not None:
             progress(i)
     return merges
@@ -164,7 +173,6 @@ def bpe_segment_words(
     merges: list[tuple[int, str, str, str, int]],
     text_col: str = "text",
     replace_passes: int = 6,
-    checkpoint_every: int = 64,
 ) -> DataFrame:
     """Apply learned merges: word → its BPE symbol count (the corpus
     token count under the learned vocab). Segmentation is a pure
@@ -173,12 +181,12 @@ def bpe_segment_words(
     runs over |vocab| rows, and the join side is a broadcast (a
     tokenizer vocab always fits).
 
-    The merge replay is ``localCheckpoint``-truncated every
-    ``checkpoint_every`` merges: one projection carrying all merges
-    nests ``merges × replace_passes`` replace nodes, which for a real
-    vocab (10k-32k merges) overwhelms analysis exactly like the
-    learning loop's lineage — the bound keeps plan depth constant at
-    vocab-sized materialization cost per window.
+    The merge replay is checkpointed every
+    :data:`SEGMENT_CHECKPOINT_EVERY` merges: one projection carrying
+    all merges nests ``merges × replace_passes`` replace nodes, which
+    for a real vocab (10k-32k merges) overwhelms analysis exactly like
+    the learning loop's lineage — the bound keeps plan depth constant
+    at vocab-sized materialization cost per window.
 
     Returns ``(w, n_sym)`` for every distinct word."""
     wf = word_frequencies(docs, text_col)
@@ -193,8 +201,8 @@ def bpe_segment_words(
     )
     for n, (_idx, x, y, _m, _cnt) in enumerate(merges, start=1):
         out = out.select("w", apply_merge(F.col("s"), x, y, replace_passes).alias("s"))
-        if n % checkpoint_every == 0 and n < len(merges):
-            out = out.localCheckpoint(eager=True)
+        if n % SEGMENT_CHECKPOINT_EVERY == 0 and n < len(merges):
+            out = checkpoint(out)
     return out.select(
         "w", F.size(F.split(F.trim("s"), " ")).cast("bigint").alias("n_sym")
     )
@@ -232,18 +240,15 @@ def unigram_lm_em(
       ``max(struct(score, path))`` — score ties break on the
       lexicographically largest path, identically in both engines (the
       oracle's ``ROW_NUMBER(ORDER BY score DESC, path DESC)``). Each
-      round's frame is localCheckpointed: dp feeds the next round
-      TWICE (carry + extend), so an unbroken lineage doubles per round
-      (the q138 2^k plan blowup).
+      round's frame is checkpointed and the previous round's freed: dp
+      feeds the next round TWICE (carry + extend), so an unbroken
+      lineage doubles per round (the q138 2^k plan blowup).
 
     Scale: substring fan-out is ≤ max_word_len · max_piece_len rows
     per DISTINCT word; every DP round is one keyed join + one grouped
     max over ≤ |words|·(max_word_len+1) rows; nothing ever scales with
     corpus rows after the first aggregate. Returns the top ``top_out``
     pieces: ``piece, piece_len, seed_freq, em_count``."""
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
-    from airbnb_pyspark_jobs_spark.functions.text import tokens
-
     L, K = int(max_piece_len), int(max_word_len)
     wf = (
         docs.select(F.explode(tokens(text_col)).alias("t"))
@@ -293,13 +298,15 @@ def unigram_lm_em(
             "word", "j", "i", "piece", "__lnp"
         )
     )
-    dp = wf.select(
-        "word",
-        F.lit(0).cast("int").alias("pos"),
-        F.struct(
-            F.lit(0).cast("bigint").alias("score"), F.lit("").alias("path")
-        ).alias("st"),
-    ).localCheckpoint()
+    dp = checkpoint(
+        wf.select(
+            "word",
+            F.lit(0).cast("int").alias("pos"),
+            F.struct(
+                F.lit(0).cast("bigint").alias("score"), F.lit("").alias("path")
+            ).alias("st"),
+        )
+    )
     for _ in range(K):
         ext = dp.join(ssubs, (dp["word"] == ssubs["word"]) & (ssubs["j"] == dp["pos"])).select(
             dp["word"],
@@ -309,12 +316,10 @@ def unigram_lm_em(
                 F.concat("st.path", F.lit("/"), "piece").alias("path"),
             ).alias("st"),
         )
-        dp = (
-            dp.unionByName(ext)
-            .groupBy("word", "pos")
-            .agg(F.max("st").alias("st"))
-            .localCheckpoint()
+        old, dp = dp, checkpoint(
+            dp.unionByName(ext).groupBy("word", "pos").agg(F.max("st").alias("st"))
         )
+        release_checkpoint(old)
     best = dp.join(wf, "word").filter(F.col("pos") == F.length("word"))
     pieces = best.select(
         "freq", F.explode(F.split(F.substring(F.col("st.path"), 2, 1 << 30), "/")).alias("piece")

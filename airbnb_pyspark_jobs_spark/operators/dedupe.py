@@ -42,6 +42,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from airbnb_pyspark_jobs_spark.caching import (
+    checkpoint,
+    collect_bounded,
+    constraint_propagation_off,
+    owned_persist,
+    release_checkpoint,
+)
 from airbnb_pyspark_jobs_spark.functions.text import (
     fingerprint,
     shingles_from_tokens,
@@ -107,7 +114,6 @@ def ngram_jaccard_pairs(
     # Persist so tokenize/shingle runs once (at cluster scale: cache to
     # MEMORY_AND_DISK or checkpoint; same principle as the reference
     # caching its dims, jobs/final_fact_load.py:20-22).
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     sh = shingle_table(docs, id_col, text_col, n)
     if max_shingle_df is not None:
@@ -174,7 +180,6 @@ def containment_pairs(
     sizes and intersections then use the filtered sets consistently.
     Cache lifecycle: registry-owned, as in :func:`ngram_jaccard_pairs`.
     """
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     sh_e = shingle_table(eval_docs, id_col, text_col, n)
     sh_t = shingle_table(train_docs, id_col, text_col, n)
@@ -283,7 +288,6 @@ def minhash_lsh_pairs(
     invocation or an explicit ``caching.release_owned_caches()``; pass
     ``persist_shingles=False`` to opt out entirely.
     """
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must divide evenly into bands")
@@ -501,14 +505,8 @@ def _collect_graph(edges: DataFrame) -> tuple[DataFrame, list | None]:
     released, else ``(edges, None)`` with the cache kept for the Spark
     loop — which then reads the edges without re-running the pair
     pipeline the bounded collect just ran. Planned with constraint
-    propagation off, as ``flat_checkpoint`` does: the closure over a
-    pair pipeline's equated columns can hang the optimizer."""
-    from airbnb_pyspark_jobs_spark.caching import (
-        collect_bounded,
-        constraint_propagation_off,
-        owned_persist,
-    )
-
+    propagation off, as :func:`caching.checkpoint` is: the closure
+    over a pair pipeline's equated columns can hang the optimizer."""
     with constraint_propagation_off(edges.sparkSession):
         edges = owned_persist(edges)
         rows = collect_bounded(edges, DRIVER_GRAPH_CAP)
@@ -585,18 +583,19 @@ def dedup_components(
     always inside its component. Each round is two joins + one groupBy
     on the node key, with an early-exit changed-label count per round.
 
-    Lineage: the edge list and each round's labels are
-    ``localCheckpoint(eager=True)``, not merely persisted — persist
+    Lineage: the edge list and each round's labels are cut with
+    :func:`caching.checkpoint`, not merely persisted — persist
     caches DATA but the logical plan still nests round over round, so
     Catalyst re-analyzes a tree that grows linearly and the JVM
     eventually overflows its stack just printing it (measured locally:
     a 60-node path graph at 20 iterations crashes with persist-only
     lineage; checkpointed it runs in ~4 s). Each superseded label
-    checkpoint is freed as the loop advances, the edge checkpoint when
-    it ends, and the final labels by the ``release_owned_caches``
-    sweep. On a fault-tolerant cluster run, swap localCheckpoint for
-    ``checkpoint()`` with a reliable checkpoint dir — same truncation,
-    executor-loss safe.
+    checkpoint is freed as the loop advances
+    (:func:`caching.release_checkpoint`), the edge checkpoint when it
+    ends, and the final labels by the ``release_owned_caches`` sweep.
+    On a fault-tolerant cluster run, swap the local checkpoint for
+    ``DataFrame.checkpoint()`` with a reliable checkpoint dir — same
+    truncation, executor-loss safe.
 
     Both paths work over EDGE ENDPOINTS only (guide §2.3/§2.4 — shuffle
     the dup graph, not the corpus): isolated docs keep ``component_id
@@ -630,20 +629,14 @@ def dedup_components(
 def _spark_labels(edges: DataFrame, max_iterations: int) -> DataFrame:
     """``node, label`` of :func:`dedup_components`' Spark loop over the
     persisted edge list, which it checkpoints and releases."""
-    from airbnb_pyspark_jobs_spark.caching import (
-        flat_checkpoint,
-        owned_checkpoint,
-        release_checkpoint,
-    )
-
-    persisted, edges = edges, flat_checkpoint(edges)
+    persisted, edges = edges, checkpoint(edges)
     persisted.unpersist()
     nodes = edges.select(F.col("a").alias("node")).distinct()
     # self-loops: min over N(v) ∪ {v} ≡ least(own, neighbor-min)
     adj = edges.unionByName(
         nodes.select(F.col("node").alias("a"), F.col("node").alias("b"))
     )
-    labels = flat_checkpoint(nodes.withColumn("label", F.col("node")))
+    labels = checkpoint(nodes.withColumn("label", F.col("node")))
     for _ in range(max_iterations):
         propagated = (
             adj.join(labels, adj.b == labels.node)
@@ -655,7 +648,7 @@ def _spark_labels(edges: DataFrame, max_iterations: int) -> DataFrame:
         parent = propagated.select(
             F.col("node").alias("__pn"), F.col("label").alias("__pl")
         )
-        new_labels = flat_checkpoint(
+        new_labels = checkpoint(
             propagated.join(parent, propagated.label == parent["__pn"], "left")
             .select(
                 "node",
@@ -674,7 +667,7 @@ def _spark_labels(edges: DataFrame, max_iterations: int) -> DataFrame:
         if changed == 0:
             break
     release_checkpoint(edges)
-    return owned_checkpoint(labels)
+    return labels
 
 
 def simhash_pairs(
@@ -741,7 +734,6 @@ def simhash_pairs(
         )
         for b in range(bands)
     ]
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     banded = owned_persist(
         sig.select(
@@ -794,7 +786,6 @@ def _positioned_shingles(
     project-collapse disguise). The lambda also references ``__tk``
     exactly once (slice + array_join, not n element gets) so the
     residual inline cost is bounded even uncached."""
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     base = docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("__tk"))
     sized = owned_persist(
@@ -871,7 +862,6 @@ def duplicated_span_coverage(
     ``caching.owned_persist`` (released by the next ``@query``
     invocation or ``caching.release_owned_caches()``).
     """
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     sized, posed = _positioned_shingles(docs, n, id_col, text_col)
     posed = owned_persist(posed)
@@ -935,8 +925,6 @@ def dup_span_run_profile(
     q103 plus an O(runs · |thresholds|) broadcast fan-out.
     """
     from pyspark.sql.window import Window
-
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     _sized, posed = _positioned_shingles(docs, n, id_col, text_col)
     posed = owned_persist(posed)
@@ -1014,8 +1002,6 @@ def cut_duplicated_spans(
     invocation or ``caching.release_owned_caches()``).
     """
     from pyspark.sql.window import Window
-
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     sized, posed = _positioned_shingles(docs, n, id_col, text_col)
     posed = owned_persist(posed)
@@ -1168,7 +1154,6 @@ def incremental_minhash_pairs(
     Cache lifecycle: new-batch bands and shingles are persisted via
     ``caching.owned_persist`` (multi-consumer), released by the next
     ``@query`` invocation."""
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     new_index = owned_persist(
         minhash_band_index(new_docs, id_col, text_col, n, num_hashes, bands)
@@ -1276,8 +1261,6 @@ def prefix_filter_jaccard_pairs(
     and candidate-only verification."""
     from pyspark.sql.window import Window
 
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
-
     tn, td = int(threshold_num), int(threshold_den)
     if not 0 < tn <= td:
         raise ValueError("threshold must be a fraction in (0, 1]")
@@ -1368,7 +1351,6 @@ def source_overlap_matrix(
     doc-level cross join; output is |sources|² at most. Returns
     ``source_a, source_b, n_a, n_b, n_common, jaccard,
     containment_a_in_b, containment_b_in_a``."""
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     if granularity == "doc":
         units = docs.select(
@@ -1502,13 +1484,15 @@ def pagerank(
     ``createDataFrame``. Past the cap the Spark loop runs: each
     iteration is one equi-join on the node key + one aggregation — the
     classic Pregel shape — and the in-loop ``ranks`` frame is
-    localCheckpoint'ed every :data:`PAGERANK_CHECKPOINT_EVERY`
-    iterations (the connected-components lineage discipline): each
-    round's plan nests the previous round's, so without truncation
-    Catalyst re-analyzes an exponentially-growing plan for ``iters`` ≫
-    5 (measured: iters=25 is O(iters) with the checkpoint, runaway
-    analysis without — SCALE_NOTES). The result reads every checkpoint
-    the loop makes; the ``release_owned_caches`` sweep frees them."""
+    checkpointed every :data:`PAGERANK_CHECKPOINT_EVERY` iterations
+    (the connected-components lineage discipline): each round's plan
+    nests the previous round's, so without truncation Catalyst
+    re-analyzes an exponentially-growing plan for ``iters`` ≫ 5
+    (measured: iters=25 is O(iters) with the checkpoint, runaway
+    analysis without — SCALE_NOTES). Each superseded ranks checkpoint
+    is freed as the loop advances; the result reads the edge, degree
+    and last ranks checkpoints, which the ``release_owned_caches``
+    sweep frees."""
     und, rows = _collect_graph(_both_orientations(edges, src_col, dst_col))
     if rows is not None:
         return und.sparkSession.createDataFrame(
@@ -1525,18 +1509,14 @@ def pagerank(
     # LOGICAL plan would duplicate the upstream edge computation (often
     # a whole similarity join) once per reference — caching alone does
     # not stop the optimizer from re-analyzing the exploded plan.
-    # localCheckpoint truncates the lineage (the connected-components
+    # checkpoint truncates the lineage (the connected-components
     # discipline; measured 74 s -> 8.7 s on the q138 shape at sf0.1;
     # the residual is the 5 small per-iteration shuffles + the edge
     # computation itself).
-    from airbnb_pyspark_jobs_spark.caching import owned_checkpoint
-
-    persisted, und = und, owned_checkpoint(und.localCheckpoint())
+    persisted, und = und, checkpoint(und)
     persisted.unpersist()
-    deg = owned_checkpoint(
-        und.groupBy("a").agg(
-            F.count(F.lit(1)).cast("bigint").alias("deg")
-        ).localCheckpoint()
+    deg = checkpoint(
+        und.groupBy("a").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     )
     nodes = deg.select(F.col("a").alias("node"), "deg")
     n_nodes = nodes.count()  # bounded planning action: one scalar
@@ -1550,9 +1530,13 @@ def pagerank(
         "node",
         F.round(F.lit(1.0) / F.lit(float(n_nodes)), r_digits).cast(dec).alias("r"),
     )
+    held = None  # the live ranks checkpoint
     for it in range(iters):
         if it > 0 and it % PAGERANK_CHECKPOINT_EVERY == 0:
-            ranks = owned_checkpoint(ranks.localCheckpoint())
+            ranks = checkpoint(ranks)
+            if held is not None:
+                release_checkpoint(held)
+            held = ranks
         contrib = (
             und.join(ranks.withColumnRenamed("node", "a"), "a")
             .join(deg, "a")
@@ -1620,14 +1604,13 @@ def triangle_counts(
     # edge computation is often a whole similarity join — truncate the
     # lineage once or every reference re-runs it (the q138/pagerank
     # lesson; measured 22 s -> 6 s on the q145 shape at sf0.1).
-    e = (
+    e = checkpoint(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
     und = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = und.groupBy("a").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
@@ -1708,7 +1691,6 @@ def minhash_estimate_calibration(
 
     Returns ``doc_id_a, doc_id_b, est_jaccard, jaccard, abs_err``.
     """
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must divide evenly into bands")
@@ -1817,7 +1799,6 @@ def soft_jaccard_pairs(
     """
     from pyspark.sql.window import Window
 
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
     from airbnb_pyspark_jobs_spark.functions.numeric import decimal_ratio_round
 
     sh = owned_persist(shingle_table(docs, id_col, text_col, n))

@@ -45,6 +45,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from airbnb_pyspark_jobs_spark.caching import (
+    checkpoint,
+    owned_persist,
+    release_checkpoint,
+)
 from airbnb_pyspark_jobs_spark.functions.numeric import round_half_up_py
 from airbnb_pyspark_jobs_spark.functions.vectors import dot, norm, to_double_array
 
@@ -507,7 +512,6 @@ def matryoshka_recall(
     corpus — same shape as the probe/quantization sweeps (q202/q293);
     at 100 TB run it on the id-bounded audit sample like the other
     recall audits (q154)."""
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
     from airbnb_pyspark_jobs_spark.functions.numeric import decimal_ratio_round
 
     # barrier the exact ranking (the q202/q344-q346 rule): `full` feeds
@@ -1386,7 +1390,6 @@ def kmeans_centroids(
     the given value (mirrorable in SQL with a WHERE) — or swap in MLlib
     k-means|| and pass the result to :func:`ivf_ann` via ``centroids=``.
     """
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     e = corpus.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("v"))
     if train_limit is not None:
@@ -1520,7 +1523,7 @@ def ivf_split_hot_cells(
     for r, cid in enumerate(hot):
         members = lists.filter(F.col("cid") == cid).select("neighbor_id", "__cv")
         # 3 consumers: 2 seed scans + the side assignment
-        members = members.localCheckpoint()
+        members = checkpoint(members)
         unit_a = _farthest_from(members, _py_unit(cents_by_id[cid]))
         unit_b = _farthest_from(members, unit_a)
         side = _assign(
@@ -1592,15 +1595,17 @@ def kmeans_centroids_two_level(
     )
     # one fused pass assigns every vector to its super AND carries the
     # raw vector
-    members = _assign(
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col)),
-        "id",
-        vec_col,
-        _unit_cents(supers),
-        round_digits,
-        out_col="__scid",
-        keep_vec="v",
-    ).localCheckpoint()  # iters+1 consumers
+    members = checkpoint(  # iters+1 consumers
+        _assign(
+            corpus.select(F.col(id_col).alias("id"), F.col(vec_col)),
+            "id",
+            vec_col,
+            _unit_cents(supers),
+            round_digits,
+            out_col="__scid",
+            keep_vec="v",
+        )
+    )
     # sub init: the k_sub lowest-id members per super, raw vectors
     wi = Window.partitionBy("__scid").orderBy("id")
     init = (
@@ -2147,7 +2152,6 @@ def lsh_candidate_pairs(
     """
     import numpy as np
 
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     g = np.array(
         [
@@ -2388,7 +2392,6 @@ def cp_candidate_pairs(
     at these settings) — the n_sides AND-refinements then cut it to the
     final ~0.08·n²/2. Exposed separately so pruning stats can be
     value-checked (the q93 pattern)."""
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     # the Arrow hashing stage feeds every tensoring side — persist so
     # it runs once, not n_sides times
@@ -2502,7 +2505,6 @@ def ivf_blocked_dup_pairs(
             vec_col=vec_col,
             round_digits=round_digits,
         )
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     # both sides of the cell self-join read this — persist so the
     # kernel's centroid-sim pass runs once, not per join side
@@ -2594,7 +2596,6 @@ def pq_train_codebooks(
     actions: 1 init + iters jobs total. At 100 TB train on an
     id-bounded sample, like :func:`kmeans_centroids`.
     """
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     sub = dims // m
     e = owned_persist(corpus.select(to_double_array(vec_col).alias("__av")))
@@ -2832,7 +2833,6 @@ def ivfpq_index(
     ``caching.owned_persist`` — released by the next ``@query``
     invocation or an explicit ``caching.release_owned_caches()`` after
     ``coded`` (which still reads it lazily) is materialized."""
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     coarse_book = pq_train_codebooks(
         corpus, m=1, k=coarse_cells, iters=coarse_iters,
@@ -2933,7 +2933,6 @@ def ivfpq_two_level_index(
     ``id_col (as neighbor_id), scid, sub, codes, sq_err``; ``supers``/
     ``subs`` are the quantizer (:func:`kmeans_centroids_two_level`'s
     shapes); ``books`` the residual PQ codebooks."""
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     spark = corpus.sparkSession
     supers, subs = kmeans_centroids_two_level(
@@ -3314,7 +3313,6 @@ def label_centroid_cosines(
     the pair fan-out is labels², never rows².
 
     Returns ``label_a < label_b, n_a, n_b, cos_sim``."""
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
 
     ex = emb.select(
         F.col(label_col).alias("label"),
@@ -3402,15 +3400,16 @@ def kcenter_coreset(
     This is a TRAINING-shaped action (the q53 k-means discipline):
     ``k-1`` bounded rounds, each ONE narrow scan (distance to the new
     center, a broadcast literal vector) + a TakeOrdered(1) — never a
-    global sort — with the running-min state localCheckpointed per
-    round so lineage stays O(1) (the q138 lesson). At 100 TB run it on
+    global sort — with the running-min state checkpointed per round
+    and the superseded round freed, so lineage and live blocks stay
+    O(1) (the q138 lesson). At 100 TB run it on
     a pre-sampled or IVF-cell-representative frame: cost is O(k·n)
     dot products regardless of corpus layout.
 
     Returns ``sel_round (bigint), vec_id (bigint), maximin_dist
     (double; NULL for the seed row)``.
     """
-    u = unit_vectors(corpus, id_col, vec_col, "vec_id", "__uv").localCheckpoint()
+    u = checkpoint(unit_vectors(corpus, id_col, vec_col, "vec_id", "__uv"))
     seed = u.orderBy("vec_id").limit(1).head()
     if seed is None:
         return u.sparkSession.createDataFrame(
@@ -3418,11 +3417,8 @@ def kcenter_coreset(
         )
     picked: list[tuple[int, int, float | None]] = [(0, int(seed["vec_id"]), None)]
     center = F.array(*[F.lit(float(x)) for x in seed["__uv"]])
-    state = u.select(
-        "vec_id",
-        "__uv",
-        F.round(F.lit(1.0) - dot(F.col("__uv"), center), round_digits).alias("__md"),
-    ).localCheckpoint()
+    md = F.round(F.lit(1.0) - dot(F.col("__uv"), center), round_digits)
+    state = checkpoint(u.select("vec_id", "__uv", md.alias("__md")))
     for t in range(1, k):
         sel_ids = [p[1] for p in picked]
         nxt = (
@@ -3436,16 +3432,19 @@ def kcenter_coreset(
         picked.append((t, int(nxt["vec_id"]), float(nxt["__md"])))
         if t < k - 1:
             center = F.array(*[F.lit(float(x)) for x in nxt["__uv"]])
-            state = state.select(
-                "vec_id",
-                "__uv",
-                F.least(
-                    F.col("__md"),
-                    F.round(
-                        F.lit(1.0) - dot(F.col("__uv"), center), round_digits
-                    ),
-                ).alias("__md"),
-            ).localCheckpoint()
+            old, state = state, checkpoint(
+                state.select(
+                    "vec_id",
+                    "__uv",
+                    F.least(
+                        F.col("__md"),
+                        F.round(
+                            F.lit(1.0) - dot(F.col("__uv"), center), round_digits
+                        ),
+                    ).alias("__md"),
+                )
+            )
+            release_checkpoint(old)
     return u.sparkSession.createDataFrame(
         picked, schema="sel_round bigint, vec_id bigint, maximin_dist double"
     )
@@ -3683,6 +3682,98 @@ def feature_covariance(
     )
 
 
+def _power_iterate(
+    base: DataFrame,
+    dims: int,
+    iters: int,
+    digits: int,
+    against: list[float] | None = None,
+) -> list[float]:
+    """``iters`` power-iteration steps ``w ← Xᵀ(Xw) / ‖Xᵀ(Xw)‖`` over
+    ``base`` (``__id, __v``) from the uniform start: per step one dot
+    pass ``s_i = round(<x_i, w>, digits)`` and one posexplode →
+    per-dimension DECIMAL sum ``m_j = Σ_i round(s_i · x_ij, digits)``,
+    normalized in plan by an exact DECIMAL sum of squares; only the d
+    values reach the driver. With ``against`` (a unit vector) each
+    ``m`` is deflated against it before normalizing — the step's only
+    difference — a broadcast-scalar pass, never a shuffle:
+
+        c    = Σ_j round(m_j · a_j, digits)       (exact DECIMAL sum)
+        m'_j = round(m_j − c · a_j, digits)
+    """
+    import math
+
+    dec = f"decimal(28,{digits})"
+    w = [round(1.0 / math.sqrt(dims), digits)] * dims
+    for _ in range(iters):
+        wlit = F.array(*[F.lit(float(x)) for x in w])
+        mk = (
+            base.select("__v", F.round(dot(F.col("__v"), wlit), digits).alias("__s"))
+            .select(F.posexplode("__v").alias("__j", "__x"), "__s")
+            .select(
+                "__j",
+                F.round(F.col("__s") * F.col("__x"), digits).cast(dec).alias("__t"),
+            )
+            .groupBy("__j")
+            .agg(F.sum("__t").alias("__m"))
+        )
+        m = F.col("__m").cast("double")
+        if against is not None:
+            aj = F.element_at(
+                F.array(*[F.lit(float(x)) for x in against]),
+                F.col("__j").cast("int") + 1,
+            )
+            c = mk.agg(F.sum(F.round(m * aj, digits).cast(dec)).alias("__c"))
+            mk = mk.crossJoin(F.broadcast(c)).select(
+                "__j",
+                F.round(m - F.col("__c").cast("double") * aj, digits).alias("__m"),
+            )
+        m18 = F.col("__m").cast(f"decimal(18,{digits})")
+        n2 = mk.agg(F.sum((m18 * m18).cast(f"decimal(38,{2 * digits})")).alias("__n2"))
+        rows = (
+            mk.crossJoin(F.broadcast(n2))
+            .select(
+                "__j",
+                # n2 == 0 (the iterate vanished) must surface as NULL —
+                # not an ANSI DIVIDE_BY_ZERO deep in a codegen stage —
+                # so the collect below can raise a clear diagnostic
+                F.round(
+                    F.when(
+                        F.col("__n2") > 0, m / F.sqrt(F.col("__n2").cast("double"))
+                    ),
+                    digits,
+                ).alias("__wj"),
+            )
+            .collect()
+        )
+        w = [0.0] * dims
+        for r in rows:
+            if r["__wj"] is None:
+                raise ValueError(
+                    "power_iteration_top2: deflated iterate is the zero "
+                    "vector (all variance lies along v1); no second "
+                    "component exists for this data"
+                    if against is not None
+                    else "power iteration: the iterate is the zero vector "
+                    "(every embedding is zero)"
+                )
+            w[r["__j"]] = r["__wj"]
+    return w
+
+
+def _power_base(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``__id, __v`` (double array), persisted: every power step and
+    the projection scan it."""
+    return owned_persist(
+        emb.select(F.col(id_col).alias("__id"), to_double_array(vec_col).alias("__v"))
+    )
+
+
+def _project(v: list[float]) -> Column:
+    """``round(<__v, v>, 4)`` — one PCA feature per vector."""
+    return F.round(dot(F.col("__v"), F.array(*[F.lit(float(x)) for x in v])), 4)
+
+
 def power_iteration_top_component(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -3694,14 +3785,11 @@ def power_iteration_top_component(
     """Top principal direction of the (uncentered) second-moment matrix
     by DISTRIBUTED power iteration — PCA's workhorse at corpus scale,
     without ever materializing the d×d covariance: each iteration is
-    one scan-side dot pass (``s_i = round(<x_i, v>, digits)``) plus one
-    posexplode → per-dimension DECIMAL aggregate
-    (``m_j = Σ_i round(s_i · x_ij, digits)``, order-independent), i.e.
-    w = Xᵀ(Xv) as two narrow passes. Only the d m-sums reach the
-    driver per iteration (the k-means bounded-action recipe), already
-    normalized IN-PLAN: ``v'_j = round(m_j / sqrt(Σ m_j²), digits)``
-    with the norm an exact DECIMAL sum of squares — so the whole
-    trajectory replays exactly in SQL (q147's unrolled-CTE pattern).
+    w = Xᵀ(Xv) as two narrow passes (:func:`_power_iterate`). Only the
+    d m-sums reach the driver per iteration (the k-means
+    bounded-action recipe), already normalized IN-PLAN with the norm
+    an exact DECIMAL sum of squares — so the whole trajectory replays
+    exactly in SQL (q147's unrolled-CTE pattern).
 
     Returns ``(v, projections)`` where ``v`` is the final unit
     direction (list of rounded doubles) and ``projections`` is
@@ -3713,61 +3801,9 @@ def power_iteration_top_component(
     squared-norm accumulates in DECIMAL(38,12) after a down-cast to
     DECIMAL(18,6) (m is O(n·x²/√d), far below 10¹²).
     """
-    import math
-
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
-    from airbnb_pyspark_jobs_spark.functions import vectors as V
-
-    base = owned_persist(
-        emb.select(
-            F.col(id_col).alias("__id"),
-            V.to_double_array(vec_col).alias("__v"),
-        )
-    )
-    dec = f"decimal(28,{digits})"
-    v = [round(1.0 / math.sqrt(dims), digits)] * dims
-    for _ in range(iters):
-        vlit = F.array(*[F.lit(float(x)) for x in v])
-        s = base.select(
-            "__id", "__v", F.round(V.dot(F.col("__v"), vlit), digits).alias("__s")
-        )
-        terms = s.select(
-            F.posexplode("__v").alias("__j", "__x"),
-            F.col("__s"),
-        ).select(
-            "__j",
-            F.round(F.col("__s") * F.col("__x"), digits).cast(dec).alias("__t"),
-        )
-        mk = terms.groupBy("__j").agg(F.sum("__t").alias("__m"))
-        n2 = mk.agg(
-            F.sum(
-                (
-                    F.col("__m").cast(f"decimal(18,{digits})")
-                    * F.col("__m").cast(f"decimal(18,{digits})")
-                ).cast(f"decimal(38,{2 * digits})")
-            ).alias("__n2")
-        )
-        rows = (
-            mk.crossJoin(F.broadcast(n2))
-            .select(
-                "__j",
-                F.round(
-                    F.col("__m").cast("double")
-                    / F.sqrt(F.col("__n2").cast("double")),
-                    digits,
-                ).alias("__vj"),
-            )
-            .collect()
-        )
-        v = [0.0] * dims
-        for r in rows:
-            v[r["__j"]] = r["__vj"]
-    vlit = F.array(*[F.lit(float(x)) for x in v])
-    proj = base.select(
-        F.col("__id").alias(id_col),
-        F.round(V.dot(F.col("__v"), vlit), 4).alias("proj"),
-    )
-    return v, proj
+    base = _power_base(emb, id_col, vec_col)
+    v = _power_iterate(base, dims, iters, digits)
+    return v, base.select(F.col("__id").alias(id_col), _project(v).alias("proj"))
 
 
 def power_iteration_top2(
@@ -3782,118 +3818,27 @@ def power_iteration_top2(
     DEFLATION — the multi-component extension of
     :func:`power_iteration_top_component`: after v1 converges, the
     second direction iterates the same w = Xᵀ(Xw) two-pass recurrence
-    but orthogonalizes each iterate against v1 IN-PLAN before
-    normalizing:
-
-        c   = Σ_j round(m_j · v1_j, digits)       (exact DECIMAL sum)
-        m'_j = round(m_j − c · v1_j, digits)
-
-    so w converges to the top eigenvector of (I − v1v1ᵀ)·XᵀX — the
-    second component — without ever forming the d×d matrix. Every
-    intermediate is pinned to ``digits`` decimals and every sum is
-    DECIMAL (order-independent), so both engines replay the identical
-    trajectory; the d-row orthogonalization is a broadcast-scalar pass,
-    never a shuffle. Returns ``(v1, v2, projections)`` with
-    ``projections = (id_col, proj1, proj2)`` rounded to 4 — the 2-D
-    PCA feature per vector. Same scale shape as the 1-component op:
-    per iteration one corpus scan + one d-group aggregate.
+    over the same persisted base but orthogonalizes each iterate
+    against v1 IN-PLAN before normalizing (:func:`_power_iterate`), so
+    w converges to the top eigenvector of (I − v1v1ᵀ)·XᵀX — the second
+    component — without ever forming the d×d matrix. The start is the
+    RAW uniform vector (the oracle chain's w0): no pre-deflation, the
+    first pass kills the v1 component. Every intermediate is pinned to
+    ``digits`` decimals and every sum is DECIMAL (order-independent),
+    so both engines replay the identical trajectory. Returns ``(v1,
+    v2, projections)`` with ``projections = (id_col, proj1, proj2)``
+    rounded to 4 — the 2-D PCA feature per vector. Raises
+    ``ValueError`` when the data has no second component. Same scale
+    shape as the 1-component op: per iteration one corpus scan + one
+    d-group aggregate.
     """
-    from airbnb_pyspark_jobs_spark.caching import owned_persist
-    from airbnb_pyspark_jobs_spark.functions import vectors as V
-
-    v1, _ = power_iteration_top_component(
-        emb, id_col=id_col, vec_col=vec_col, dims=dims, iters=iters, digits=digits
-    )
-    base = owned_persist(
-        emb.select(
-            F.col(id_col).alias("__id"),
-            V.to_double_array(vec_col).alias("__v"),
-        )
-    )
-    dec = f"decimal(28,{digits})"
-    import math
-
-    v1lit = F.array(*[F.lit(float(x)) for x in v1])
-    w = [round(1.0 / math.sqrt(dims), digits)] * dims
-    # deterministic start: the RAW uniform vector (matching the oracle
-    # chain's w0). No pre-deflation — orthogonalization against v1
-    # happens INSIDE each iteration (the c / __m2 steps below), which
-    # kills the v1 component after the first pass.
-    for _ in range(iters):
-        wlit = F.array(*[F.lit(float(x)) for x in w])
-        s = base.select(
-            "__id", "__v", F.round(V.dot(F.col("__v"), wlit), digits).alias("__s")
-        )
-        terms = s.select(
-            F.posexplode("__v").alias("__j", "__x"),
-            F.col("__s"),
-        ).select(
-            "__j",
-            F.round(F.col("__s") * F.col("__x"), digits).cast(dec).alias("__t"),
-        )
-        mk = terms.groupBy("__j").agg(F.sum("__t").alias("__m"))
-        c = mk.agg(
-            F.sum(
-                F.round(
-                    F.col("__m").cast("double")
-                    * F.element_at(v1lit, F.col("__j").cast("int") + 1),
-                    digits,
-                ).cast(dec)
-            ).alias("__c")
-        )
-        md = mk.crossJoin(F.broadcast(c)).select(
-            "__j",
-            F.round(
-                F.col("__m").cast("double")
-                - F.col("__c").cast("double")
-                * F.element_at(v1lit, F.col("__j").cast("int") + 1),
-                digits,
-            ).alias("__m2"),
-        )
-        n2 = md.agg(
-            F.sum(
-                (
-                    F.col("__m2").cast(f"decimal(18,{digits})")
-                    * F.col("__m2").cast(f"decimal(18,{digits})")
-                ).cast(f"decimal(38,{2 * digits})")
-            ).alias("__n2")
-        )
-        rows = (
-            md.crossJoin(F.broadcast(n2))
-            .select(
-                "__j",
-                # n2 == 0 (no second component) must surface as NULL —
-                # not an ANSI DIVIDE_BY_ZERO deep in a codegen stage —
-                # so the collect below can raise a clear diagnostic
-                F.round(
-                    F.when(
-                        F.col("__n2") > 0,
-                        F.col("__m2") / F.sqrt(F.col("__n2").cast("double")),
-                    ),
-                    digits,
-                ).alias("__wj"),
-            )
-            .collect()
-        )
-        w = [0.0] * dims
-        for r in rows:
-            if r["__wj"] is None:
-                # n2 == 0: the deflated iterate vanished — the data has
-                # no second component (embeddings lie in span(v1)).
-                # Fail with a diagnostic instead of a downstream
-                # F.lit(None) TypeError.
-                raise ValueError(
-                    "power_iteration_top2: deflated iterate is the zero "
-                    "vector (all variance lies along v1); no second "
-                    "component exists for this data"
-                )
-            w[r["__j"]] = r["__wj"]
-    v1lit = F.array(*[F.lit(float(x)) for x in v1])
-    wlit = F.array(*[F.lit(float(x)) for x in w])
+    base = _power_base(emb, id_col, vec_col)
+    v1 = _power_iterate(base, dims, iters, digits)
+    w = _power_iterate(base, dims, iters, digits, against=v1)
     proj = base.select(
         F.col("__id").alias(id_col),
-        F.round(V.dot(F.col("__v"), v1lit), 4).alias("proj1"),
-        F.round(V.dot(F.col("__v"), wlit), 4).alias("proj2"),
+        _project(v1).alias("proj1"),
+        _project(w).alias("proj2"),
     )
     return v1, w, proj
 
@@ -3922,13 +3867,14 @@ def mmr_topk(
     (lit(1.0)-lit(lam))*ms`` so the oracle can replay the identical
     IEEE ops, argmax tie-break on lowest id. k-1 bounded rounds, each
     one narrow scan (cosine to the newly selected vector, broadcast as
-    literals) + TakeOrdered(1); running-max state localCheckpointed
-    per round (O(1) lineage). Cost O(k·n) dot products.
+    literals) + TakeOrdered(1); running-max state checkpointed per
+    round, the superseded round freed (O(1) lineage and blocks). Cost
+    O(k·n) dot products.
 
     Returns ``sel_round, vec_id, rel, max_sim, mmr_score`` (max_sim /
     mmr_score NULL for the first pick, which is pure-relevance).
     """
-    u = unit_vectors(corpus, id_col, vec_col, "vec_id", "__uv").localCheckpoint()
+    u = checkpoint(unit_vectors(corpus, id_col, vec_col, "vec_id", "__uv"))
     qrow = u.orderBy("vec_id").limit(1).head()
     schema = (
         "sel_round bigint, vec_id bigint, rel double,"
@@ -3947,12 +3893,14 @@ def mmr_topk(
         return u.sparkSession.createDataFrame([], schema=schema)
     picked: list[tuple] = [(0, int(first["vec_id"]), float(first["__rel"]), None, None)]
     center = F.array(*[F.lit(float(x)) for x in first["__uv"]])
-    state = cand.select(
-        "vec_id",
-        "__uv",
-        "__rel",
-        F.round(dot(F.col("__uv"), center), round_digits).alias("__ms"),
-    ).localCheckpoint()
+    state = checkpoint(
+        cand.select(
+            "vec_id",
+            "__uv",
+            "__rel",
+            F.round(dot(F.col("__uv"), center), round_digits).alias("__ms"),
+        )
+    )
     lam_c = F.lit(float(lam))
     om_c = F.lit(1.0) - F.lit(float(lam))
     for t in range(1, k):
@@ -3980,13 +3928,16 @@ def mmr_topk(
         )
         if t < k - 1:
             center = F.array(*[F.lit(float(x)) for x in nxt["__uv"]])
-            state = state.select(
-                "vec_id",
-                "__uv",
-                "__rel",
-                F.greatest(
-                    F.col("__ms"),
-                    F.round(dot(F.col("__uv"), center), round_digits),
-                ).alias("__ms"),
-            ).localCheckpoint()
+            old, state = state, checkpoint(
+                state.select(
+                    "vec_id",
+                    "__uv",
+                    "__rel",
+                    F.greatest(
+                        F.col("__ms"),
+                        F.round(dot(F.col("__uv"), center), round_digits),
+                    ).alias("__ms"),
+                )
+            )
+            release_checkpoint(old)
     return u.sparkSession.createDataFrame(picked, schema=schema)

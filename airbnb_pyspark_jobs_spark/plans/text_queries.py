@@ -5839,9 +5839,9 @@ def q262_dup_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # node count — without truncation the whole Jaccard pair join was
     # re-analyzed AND re-executed once per reference (r12 plan audit:
     # 176 Exchanges before, the pair subtree ~6×; guide §2.4/§5)
-    from airbnb_pyspark_jobs_spark.caching import flat_checkpoint
+    from airbnb_pyspark_jobs_spark.caching import checkpoint
 
-    edges = flat_checkpoint(
+    edges = checkpoint(
         pairs.select(F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b"))
         .unionByName(
             pairs.select(F.col("doc_id_b").alias("a"), F.col("doc_id_a").alias("b"))
@@ -6037,14 +6037,17 @@ def _q265_oracle() -> str:
 def q265_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     pairs = DD.ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=50)
-    # localCheckpoint, not persist: each peel round references the prior
+    # checkpoint, not persist: each peel round references the prior
     # round 3x (degree union + both semi-joins) and the stats rows once
     # more, so an un-truncated lineage re-nests the whole shingle
     # pipeline 3^R times at ANALYSIS time (the q138 plan-explosion
-    # trap, in loop form).
-    edges = pairs.select(
-        F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b")
-    ).localCheckpoint(eager=True)
+    # trap, in loop form). The per-round stats read every round's
+    # checkpoint, so all of them stay until the release sweep.
+    from airbnb_pyspark_jobs_spark.caching import checkpoint
+
+    edges = checkpoint(
+        pairs.select(F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b"))
+    )
     spark_rounds = []
 
     def stats(e: DataFrame, rnd: int) -> DataFrame:
@@ -6068,11 +6071,10 @@ def q265_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("__deg"))
         )
         keep = deg.filter(F.col("__deg") >= _Q265_K).select("node")
-        cur = (
+        cur = checkpoint(
             cur.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
         spark_rounds.append(stats(cur, r))
     out = spark_rounds[0]

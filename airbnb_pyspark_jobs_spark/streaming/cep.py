@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from airbnb_pyspark_jobs_spark import caching
 from airbnb_pyspark_jobs_spark.streaming.dedupe import _read_state
 
 _CEP_STATE_SCHEMA = "source string, last_id long, start_id long, run long"
@@ -222,9 +223,8 @@ def dup_burst_batch(
         & ((F.col("i_start") - F.col("last_id")) >= 0)
         & ((F.col("i_start") - F.col("last_id")) <= gap)
     )
-    adj = (
-        islands.join(prior, "source", "left")
-        .select(
+    adj = caching.checkpoint(  # three consumers below; also freezes the state read
+        islands.join(prior, "source", "left").select(
             "source",
             "island",
             "n_islands",
@@ -241,7 +241,6 @@ def dup_burst_batch(
             F.col("start_id").alias("p_start"),
             F.col("run").alias("p_run"),
         )
-        .localCheckpoint()  # three consumers below; also freezes the state read
     )
 
     closed_prior = adj.filter(F.col("closes_prior") & (F.col("p_run") >= min_run)).select(

@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airbnb_pyspark_jobs_spark import caching
 from airbnb_pyspark_jobs_spark.operators.dedupe import (
     incremental_minhash_pairs,
     minhash_band_index,
@@ -142,7 +143,7 @@ def dedup_batch(
     STORED band index, exact-Jaccard verification, keep-first keeper
     rule, and the three idempotent ``batch_id=N``-partitioned state
     writes (accepted/index/dups — see module docstring). Returns the
-    batch's ACCEPTED docs (localCheckpointed) so composed pipelines
+    batch's ACCEPTED docs (checkpointed) so composed pipelines
     (streaming/pipeline.py) can chain further stages off the survivors;
     returns None for an empty batch. Shared by
     :func:`streaming_minhash_dedup` and the composed corpus pipeline —
@@ -151,28 +152,28 @@ def dedup_batch(
     accepted_dir = os.path.join(warehouse, "accepted")
     index_dir = os.path.join(warehouse, "index")
     dups_dir = os.path.join(warehouse, "dups")
-    batch = (
+    batch = caching.checkpoint(  # stream sources can't be re-read per consumer
         batch_df.select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).alias("text"),
-        )
-        .dropDuplicates(["doc_id"])
-        .localCheckpoint()  # stream sources can't be re-read per consumer
+        ).dropDuplicates(["doc_id"])
     )
     if batch.isEmpty():
         return None
     _assert_checkpoint_matches(spark, accepted_dir, _DOCS_SCHEMA, batch_id)
     old_docs = _read_state(spark, accepted_dir, _DOCS_SCHEMA, batch_id)
     old_index = _read_state(spark, index_dir, _INDEX_SCHEMA, batch_id)
-    pairs = incremental_minhash_pairs(
-        batch,
-        old_docs,
-        old_index,
-        n=n,
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=threshold,
-    ).localCheckpoint()
+    pairs = caching.checkpoint(
+        incremental_minhash_pairs(
+            batch,
+            old_docs,
+            old_index,
+            n=n,
+            num_hashes=num_hashes,
+            bands=bands,
+            threshold=threshold,
+        )
+    )
     new_ids = batch.select("doc_id")
     # new doc paired with an accepted doc -> the NEW side is rejected
     rej_vs_old = (
@@ -185,7 +186,7 @@ def dedup_batch(
         F.col("doc_id_b").alias("doc_id")
     )
     rejected = rej_vs_old.unionByName(rej_in_batch).distinct()
-    accepted = batch.join(rejected, "doc_id", "left_anti").localCheckpoint()
+    accepted = caching.checkpoint(batch.join(rejected, "doc_id", "left_anti"))
     # idempotent per-batch state: overwrite THIS batch's partition
     # dir (a replayed batch rewrites the same paths, never appends
     # duplicates; see module docstring)
@@ -244,8 +245,6 @@ def streaming_video_dedup(
             )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from airbnb_pyspark_jobs_spark.caching import release_owned_caches
-
         if (
             compact_every_n_batches
             and batch_id > 0
@@ -258,7 +257,7 @@ def streaming_video_dedup(
                 max_l1_runs=compact_max_l1_runs,
             )
         seq = frame_sequence_docs(
-            frame_hashes(batch_df.localCheckpoint(), resizer=resizer)
+            frame_hashes(caching.checkpoint(batch_df), resizer=resizer)
         )
         dedup_batch(
             seq,
@@ -271,7 +270,7 @@ def streaming_video_dedup(
             bands=bands,
             threshold=threshold,
         )
-        release_owned_caches()
+        caching.release_owned_caches()
 
     return (
         media_stream.writeStream.foreachBatch(process_batch)
@@ -421,8 +420,6 @@ def streaming_minhash_dedup(
             )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from airbnb_pyspark_jobs_spark.caching import release_owned_caches
-
         if (
             compact_every_n_batches
             and batch_id > 0
@@ -445,7 +442,7 @@ def streaming_minhash_dedup(
             bands=bands,
             threshold=threshold,
         )
-        release_owned_caches()
+        caching.release_owned_caches()
 
     return (
         doc_stream.writeStream.foreachBatch(process_batch)

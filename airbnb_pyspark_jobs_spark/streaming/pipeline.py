@@ -57,6 +57,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from airbnb_pyspark_jobs_spark import caching
 from airbnb_pyspark_jobs_spark.operators.corpus import quality_filter
 from airbnb_pyspark_jobs_spark.operators.sampling import hash_split
 from airbnb_pyspark_jobs_spark.streaming.aggregates import psi_bucket_counts
@@ -133,8 +134,6 @@ def streaming_corpus_pipeline(
     fractions = split_fractions or dict(_DEFAULT_SPLITS)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from airbnb_pyspark_jobs_spark.caching import release_owned_caches
-
         if (
             compact_every_n_batches
             and batch_id > 0
@@ -176,16 +175,14 @@ def streaming_corpus_pipeline(
             )
         meta = None
         if source_col is not None:
-            # one localCheckpoint so the stream source isn't re-read by
-            # the dim snapshot AND the CEP anti-join below
-            meta = (
+            # one checkpoint so the stream source isn't re-read by the
+            # dim snapshot AND the CEP anti-join below
+            meta = caching.checkpoint(
                 batch_df.select(
                     F.col(id_col).cast("long").alias("doc_id"),
                     F.col(source_col).cast("string").alias("source"),
                     *[F.col(c) for c in dim_tracked],
-                )
-                .dropDuplicates(["doc_id"])
-                .localCheckpoint()
+                ).dropDuplicates(["doc_id"])
             )
         accepted = dedup_batch(
             batch_df,
@@ -201,7 +198,7 @@ def streaming_corpus_pipeline(
         if accepted is None:
             return
         part = f"batch_id={batch_id}"
-        gated = (
+        gated = caching.checkpoint(  # three consumers below
             accepted.join(
                 quality_filter(accepted, min_tokens=min_tokens)
                 .filter(F.col("keep"))
@@ -209,7 +206,6 @@ def streaming_corpus_pipeline(
                 "doc_id",
                 "left_semi",
             )
-            .localCheckpoint()  # three consumers below
         )
         gated.write.mode("overwrite").parquet(
             os.path.join(warehouse, "gated", part)
@@ -264,7 +260,7 @@ def streaming_corpus_pipeline(
                 gap=cep_gap,
                 min_run=cep_min_run,
             )
-        release_owned_caches()
+        caching.release_owned_caches()
 
     return (
         doc_stream.writeStream.foreachBatch(process_batch)

@@ -1,12 +1,14 @@
-"""Cache-ownership hygiene: persisting queries must not leak blocks.
+"""Cache-ownership hygiene: persisting and checkpointing code must not
+leak blocks.
 
 Operators persist intermediates that multiple downstream branches read
-(shingle tables, candidate pairs, CMS term frequencies). The contract
-(`caching.owned_persist`) is that those caches are registered and
-released by the next `@query` invocation / an explicit
-`release_owned_caches()` — so a long-lived session running the whole
-registry (the driver's loop, bench.py) holds at most one query's
-intermediates at a time instead of accumulating them until eviction.
+(shingle tables, candidate pairs, CMS term frequencies) and checkpoint
+loop state. The contract (`caching.owned_persist`,
+`caching.checkpoint`) is that those blocks are registered and released
+by the next `@query` invocation / an explicit `release_owned_caches()`
+— so a long-lived session running the whole registry (the driver's
+loop, bench.py) holds at most one query's intermediates at a time
+instead of accumulating them until eviction.
 """
 
 from __future__ import annotations
@@ -16,6 +18,8 @@ import os
 import pytest
 
 from airbnb_pyspark_jobs_spark.caching import release_owned_caches
+from airbnb_pyspark_jobs_spark.operators import dedupe as DD
+from airbnb_pyspark_jobs_spark.operators import similarity as SIM
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -108,14 +112,14 @@ def test_nested_query_invocation_keeps_composers_caches(spark):
         release_owned_caches()
 
 
-def test_flat_checkpoint_concurrent_callers_restore_conf(spark):
-    """`flat_checkpoint` toggles the session-global constraint-
+def test_checkpoint_concurrent_callers_restore_conf(spark):
+    """`checkpoint` toggles the session-global constraint-
     propagation conf; concurrent callers must not interleave the
     read-toggle-restore (a thread reading another's ``false`` as its
     "previous" value would leave propagation off for the session)."""
     import threading
 
-    from airbnb_pyspark_jobs_spark.caching import flat_checkpoint
+    from airbnb_pyspark_jobs_spark.caching import checkpoint
 
     key = "spark.sql.constraintPropagation.enabled"
     original = spark.conf.get(key)
@@ -129,7 +133,7 @@ def test_flat_checkpoint_concurrent_callers_restore_conf(spark):
             barrier.wait()
             for r in range(3):
                 df = spark.range(10 + i + r)
-                counts.append(flat_checkpoint(df).count())
+                counts.append(checkpoint(df).count())
         except BaseException as exc:  # surfaced below
             errors.append(exc)
 
@@ -143,3 +147,78 @@ def test_flat_checkpoint_concurrent_callers_restore_conf(spark):
         10 + i + r for i in range(n_threads) for r in range(3)
     )
     assert spark.conf.get(key) == original
+
+
+def test_package_has_one_local_checkpoint_call():
+    """Every lineage cut in the package goes through
+    ``caching.checkpoint``: exactly one ``.localCheckpoint(`` call in
+    the package, inside that function."""
+    import ast
+    import pathlib
+
+    import airbnb_pyspark_jobs_spark
+
+    root = pathlib.Path(airbnb_pyspark_jobs_spark.__file__).parent
+    owners = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in tree.body:
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                ):
+                    name = getattr(fn, "name", type(fn).__name__)
+                    owners.append(f"{path.relative_to(root)}:{name}")
+    assert owners == ["caching.py:checkpoint"]
+
+
+def _leaked_rdd_ids(spark, run) -> set[int]:
+    """Persistent RDD ids created by ``run()`` that survive
+    ``release_owned_caches()``."""
+    jsc = spark.sparkContext._jsc
+    release_owned_caches()
+    before = set(jsc.getPersistentRDDs().keys())
+    run()
+    release_owned_caches()
+    return set(jsc.getPersistentRDDs().keys()) - before
+
+
+@pytest.mark.parametrize(
+    "qname",
+    ["q89_bpe_merges", "q265_kcore_peeling", "q311_unigram_tokenizer_em"],
+)
+def test_checkpointing_query_leaks_no_rdd(spark, qname):
+    """The merge loop, the k-core peel rounds and the Viterbi DP
+    checkpoint every round; none outlives the release sweep."""
+    from airbnb_pyspark_jobs_spark.plans import QUERIES
+
+    run = lambda: QUERIES[qname](spark, SF_DIR).collect()  # noqa: E731
+    assert _leaked_rdd_ids(spark, run) == set()
+
+
+def _vectors(spark):
+    return spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5) + 1.0, float(i % 7)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda spark: SIM.kcenter_coreset(_vectors(spark), k=4).collect(),
+        lambda spark: SIM.mmr_topk(_vectors(spark), k=4).collect(),
+        lambda spark: DD.triangle_counts(
+            spark.createDataFrame(
+                [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "src long, dst long"
+            )
+        ).collect(),
+    ],
+    ids=["kcenter_coreset", "mmr_topk", "triangle_counts"],
+)
+def test_checkpointing_operator_leaks_no_rdd(spark, run):
+    """Greedy selection loops free each superseded round and hand the
+    rest, like the triangle edge list, to the release sweep."""
+    assert _leaked_rdd_ids(spark, lambda: run(spark)) == set()

@@ -11,6 +11,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from airbnb_pyspark_jobs_spark.caching import release_owned_caches
 from airbnb_pyspark_jobs_spark.operators.corpus import quality_filter
 from airbnb_pyspark_jobs_spark.operators.dedupe import minhash_lsh_pairs
 from airbnb_pyspark_jobs_spark.operators.sampling import hash_split
@@ -92,7 +93,12 @@ def test_composed_pipeline_equals_batch_composition(spark, tmp_path):
     src = str(tmp_path / "src")
     _source_files(spark, src)
     wh, ckpt = str(tmp_path / "wh"), str(tmp_path / "ckpt")
+    jsc = spark.sparkContext._jsc
+    release_owned_caches()
+    before = set(jsc.getPersistentRDDs().keys())
     _drain(spark, src, wh, ckpt)
+    # every batch's checkpoints are freed by its own release sweep
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
     acc_rows, gated_rows, psi_rows, shard_rows = _state(spark, wh)
     acc_ids = {d for d, _ in acc_rows}
 
