@@ -25,7 +25,7 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 from airbnb_pyspark_jobs_spark.plans import QUERIES  # noqa: E402
-from airbnb_pyspark_jobs_spark.session import get_spark  # noqa: E402
+from airbnb_pyspark_jobs_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -562,6 +562,17 @@ def run_query(spark, name: str) -> float:
     return time.perf_counter() - t0
 
 
+def timed_runs(spark, name: str, n: int, compiles: dict[str, int]) -> list[float]:
+    """``n`` runs of ``name``, sorted; the classes Spark compiled across
+    them go into ``compiles`` where the count is readable. A class
+    compiled again on a repeat run means the codegen cache evicted it."""
+    before = codegen_compiles(spark)
+    runs = sorted(run_query(spark, name) for _ in range(n))
+    if before is not None:
+        compiles[name] = codegen_compiles(spark) - before
+    return runs
+
+
 def family_main(families: list[str], names: list[str]) -> None:
     """Dev-loop subset bench (VERDICT r8 #7): time only the named
     queries and/or families (registry family tags, the same ones
@@ -636,9 +647,10 @@ def main() -> None:
     times: dict[str, float] = {}
     medians: dict[str, float] = {}
     errors: dict[str, str] = {}
+    compiles: dict[str, int] = {}
     for name in bench:
         try:
-            runs = sorted(run_query(spark, name) for _ in range(3))
+            runs = timed_runs(spark, name, 3, compiles)
             times[name] = round(runs[0], 3)
             medians[name] = round(runs[len(runs) // 2], 3)
         except Exception as e:  # a broken query must not sink the whole bench
@@ -648,7 +660,7 @@ def main() -> None:
     extended: dict[str, float] = {}
     for name in [q for q in EXTENDED_QUERIES if q in QUERIES] + TAIL_QUERIES:
         try:
-            extended[name] = round(min(run_query(spark, name) for _ in range(2)), 3)
+            extended[name] = round(timed_runs(spark, name, 2, compiles)[0], 3)
         except Exception as e:
             errors[name] = f"{type(e).__name__}: {e}"[:200]
     floor_end = measure_floor(spark)
@@ -695,6 +707,7 @@ def main() -> None:
     full = dict(payload)
     full["queries_median"] = medians
     full["queries_extended"] = extended
+    full["codegen_compiles"] = compiles
     if errors:
         full["errors"] = errors
     with open(os.path.join(REPO, "docs", "bench_full_latest.json"), "w") as fh:

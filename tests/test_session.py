@@ -5,7 +5,9 @@ inert in local mode."""
 
 from __future__ import annotations
 
-from airbnb_pyspark_jobs_spark.session import PROFILES
+from airbnb_pyspark_jobs_spark.plans import QUERIES
+from airbnb_pyspark_jobs_spark.session import PROFILES, codegen_compiles
+from tests.conftest import SF_DIR
 
 _DIM_EXPECTED = {
     "spark.sql.shuffle.partitions": "50",
@@ -89,3 +91,27 @@ def test_streaming_profile_runs_stateful_query_on_rocksdb(spark, tmp_path):
         ) or glob.glob(str(tmp_path / "ckpt/state/**/*.changelog"), recursive=True)
     finally:
         spark.conf.set(key, prev)
+
+
+# Warehouse queries whose classes, compiled cold, outnumber Spark's
+# default codegen cache (149 at sf0.001 against 100 entries).
+_COMPILE_SET = (
+    "q03_shipping_priority", "q05_revenue_by_region", "q07_nation_trade_flows",
+    "q22_scd2_merge_customer", "q23_scd2_merge_with_deletes", "q177_waiting_suppliers",
+)
+
+
+def test_repeated_pass_reuses_generated_classes(spark):
+    """A second pass over the same queries in one JVM must find its
+    whole-stage classes in the codegen cache. With Spark's default of
+    100 entries it compiled 132-135 of the set's 149 classes again; at
+    1000 it compiled 0-6."""
+
+    def one_pass() -> int:
+        before = codegen_compiles(spark)
+        for name in _COMPILE_SET:
+            QUERIES[name](spark, SF_DIR).toPandas()
+        return codegen_compiles(spark) - before
+
+    one_pass()
+    assert one_pass() <= 20
